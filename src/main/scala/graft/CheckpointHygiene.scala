@@ -1,46 +1,54 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Storage hygiene for `localCheckpoint`-heavy suites.
   *
   * Iterative kernels (connected components, PageRank, BPE, the
   * ScaleWindows range-exchange materialization) eagerly
   * `localCheckpoint()` intermediate frames; Spark persists those RDDs
-  * and nothing ever unpersists them — a full 407-query sweep (≥2 runs
-  * each) accumulates thousands of checkpoint blocks in block storage
-  * for the whole session, degrading to eviction/disk-spill as a bench
-  * progresses.
+  * and nothing ever unpersists them — a full 400-query sweep
+  * accumulates thousands of checkpoint blocks in block storage for the
+  * whole session, degrading to eviction/disk-spill as it progresses.
   *
-  * [[release]] drops every LOCALLY-checkpointed persistent RDD. Safety
-  * contract: call it only at a query boundary, after the consuming
-  * action finished — a localCheckpoint truncates lineage, so its
-  * blocks are unrecoverable once dropped (this is precisely why the
-  * sweep must not unpersist mid-query). Explicit `persist()`/`cache()`
-  * frames (e.g. the NewsPipeline shared trunk, which IS reused across
-  * queries and CAN recompute from lineage) are deliberately left
-  * alone.
+  * [[release]] drops every LOCALLY-checkpointed persistent RDD except
+  * the pinned ones. Safety contract: call it only at a query boundary,
+  * after the consuming action finished — a localCheckpoint truncates
+  * lineage, so its blocks are unrecoverable once dropped (this is
+  * precisely why the sweep must not unpersist mid-query). Session
+  * trunks ([[Materialize.trunk]]) are the only pinned frames; explicit
+  * `persist()`/`cache()` frames (e.g. the NewsPipeline trunk, which CAN
+  * recompute from lineage) are left alone. A kernel that knows a
+  * generation is dead drops it early with [[drop]].
   */
 object CheckpointHygiene {
-  /** RDD ids that [[release]] must never drop: cross-QUERY memoized
-    * checkpoints (e.g. the near-dup group trunk in TrainingData) hand
-    * out the same truncated-lineage frame to many queries — their
-    * blocks are unrecoverable, so dropping them at a query boundary
-    * would poison every later cache hit. */
+  /** RDD ids that [[release]] must never drop: session trunks hand out
+    * the same truncated-lineage frame to many queries — their blocks
+    * are unrecoverable, so dropping them at a query boundary would
+    * poison every later trunk hit. */
   private val pinnedIds =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
-  /** Run `build` (which is expected to `localCheckpoint` something)
-    * and pin every persistent RDD it newly registered, exempting them
-    * from [[release]] for the life of the session. Queries run
-    * sequentially in Verify/Bench, so the before/after diff is not
-    * racy in practice; a concurrent caller could at worst over-pin. */
-  def pinning[T](spark: SparkSession)(build: => T): T = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = build
-    spark.sparkContext.getPersistentRDDs.keysIterator
-      .filterNot(before).foreach(pinnedIds.add(_))
-    out
+  /** Exempt the RDD behind checkpointed frame `df` from [[release]]
+    * for the life of the session. Returns `df`. */
+  def pin(df: DataFrame): DataFrame = {
+    df.queryExecution.logical match {
+      case lr: LogicalRDD => pinnedIds.add(lr.rdd.id)
+      case _ => // not a checkpoint leaf; release never touches it
+    }
+    df
+  }
+
+  /** Unpersist a dead checkpoint generation now instead of at the next
+    * query boundary. Dataset.unpersist only clears CacheManager
+    * entries — checkpoint blocks are RDD storage, so unpersist the
+    * LogicalRDD's RDD directly (waiting for the ContextCleaner to GC
+    * them is unbounded). Also valid for a lazy checkpoint that never
+    * materialized: its RDD is persist-marked all the same. */
+  def drop(df: DataFrame): Unit = df.queryExecution.logical match {
+    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
   }
 
   /** Unpersist all non-pinned checkpointed RDDs. Returns how many were

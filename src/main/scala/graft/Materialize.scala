@@ -1,19 +1,20 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The materialization seam for every trunk/iteration checkpoint in the
-  * query library.
+/** The materialization seam for every checkpoint and cross-query trunk
+  * in the query library.
   *
   * Queries and iterative kernels eagerly `localCheckpoint()` reusable
-  * frames (trunk tables, fixpoint frontiers). That truncates lineage to
-  * a `LogicalRDD`, which blinds plan-walking tools — most importantly
-  * the mirrored-double hash-stability detector (HashStabilitySpec),
-  * which must see every `Round(double)` in a query's FULL lineage to
-  * enroll it in the partitioning-perturbation family (the r6 q316/q344
-  * float-drift class escaped precisely through this hole).
+  * frames (fixpoint frontiers, shared intermediates). That truncates
+  * lineage to a `LogicalRDD`, which blinds plan-walking tools — most
+  * importantly the mirrored-double hash-stability detector
+  * (HashStabilitySpec), which must see every `Round(double)` in a
+  * query's FULL lineage to enroll it in the partitioning-perturbation
+  * family (the r6 q316/q344 float-drift class escaped precisely through
+  * this hole).
   *
   * All library code therefore checkpoints through [[trunkCheckpoint]]
   * instead of calling `localCheckpoint` directly. Besides
@@ -27,17 +28,23 @@ import org.apache.spark.sql.execution.LogicalRDD
   * The map key is the RDD id, not the plan node: self-joins copy the
   * `LogicalRDD` via `newInstance` (fresh exprIds) but share the RDD.
   *
-  * Two thread-local modes adjust behavior for tools:
-  *  - [[transparent]]: [[trunkCheckpoint]] is the identity and trunk
-  *    memo caches bypass themselves — the caller sees the raw build
+  * SESSION TRUNKS ([[trunk]]): frames a production pipeline writes once
+  * per run and every consumer reads (the dbt `transformed` table and
+  * marts, edge lists, near-dup group tables — SURVEY §4). [[trunk]] is
+  * the one place that decides how such a frame is memoized, per mode:
+  *  - normal: built once per (session, key), materialized eagerly (a
+  *    pinned checkpoint unless the caller passes its own
+  *    materialization) and returned by reference to every later query.
+  *  - [[transparent]]: [[trunkCheckpoint]] is the identity and
+  *    [[trunk]] returns the raw build — the caller sees the full build
   *    lineage. For plan inspection of SMALL builds only (the planted
   *    detector spec); never execute an iterative kernel this way.
-  *  - [[fresh]]: checkpoints behave normally (bounded plans) but memo
-  *    caches bypass, so a perturbation harness re-executing a query
-  *    rebuilds its trunks under the CURRENT session config instead of
-  *    reading a frame materialized under the default config. Fresh
-  *    builds are not pinned — CheckpointHygiene.release reclaims them
-  *    at the next query boundary.
+  *  - [[fresh]]: checkpoints behave normally (bounded plans) but the
+  *    session memo is bypassed, so a perturbation harness re-executing
+  *    a query rebuilds its trunks under the CURRENT session config
+  *    instead of reading a frame materialized under the default
+  *    config. Each key is built once per fresh scope, unpinned —
+  *    CheckpointHygiene.release reclaims it at the next query boundary.
   */
 object Materialize {
 
@@ -48,41 +55,30 @@ object Materialize {
     override def initialValue: Integer = 0
   }
   // per-[[fresh]]-scope memo: one trunk build per scope even when
-  // several consumers inside the scope ask for the same stage (the
-  // bare bypass used to rebuild co-order edges 2-3x inside ONE query
-  // because coOrderDegrees/coOrderAdjacency each re-enter the cache
-  // site). Created at the OUTERMOST fresh entry, dropped at its exit,
-  // so distinct timed/perturbed runs never share a build.
-  private val freshScope = new ThreadLocal[java.util.HashMap[Any, AnyRef]]
-  // set by every memo cache site on lookup (any mode): lets a harness
-  // detect "this query is backed by a cross-query memoized trunk"
-  // without a hard-coded query list (Bench's build-charged timing).
-  private val memoSeen = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue: java.lang.Boolean = false
-  }
+  // several consumers inside the scope ask for the same key. Created
+  // at the OUTERMOST fresh entry, dropped at its exit, so distinct
+  // perturbed runs never share a build.
+  private val freshScope =
+    new ThreadLocal[java.util.HashMap[Any, DataFrame]]
 
-  def isTransparent: Boolean = transparentDepth.get > 0
+  private def isTransparent: Boolean = transparentDepth.get > 0
 
-  /** True when trunk memo caches must bypass themselves (either
-    * tool mode). Cache sites consult this, never the modes directly. */
-  def bypassMemo: Boolean = isTransparent || freshDepth.get > 0
-
-  /** Run `body` with every [[trunkCheckpoint]] a no-op and every memo
-    * cache bypassed (full lineage). Reentrant, thread-local. */
+  /** Run `body` with every [[trunkCheckpoint]] a no-op and every
+    * [[trunk]] returning its raw build (full lineage). Reentrant,
+    * thread-local. */
   def transparent[T](body: => T): T = {
     transparentDepth.set(transparentDepth.get + 1)
     try body finally transparentDepth.set(transparentDepth.get - 1)
   }
 
-  /** Run `body` with memo caches bypassed but checkpoints intact:
-    * trunks rebuild under the caller's current session config. Within
-    * one (outermost) fresh scope, [[scopedMemo]] still deduplicates
-    * repeated builds of the same stage — the scope pays each trunk
-    * build exactly once, like a production run that writes the
-    * artifact once and reads it everywhere. */
+  /** Run `body` with the session trunk memo bypassed but checkpoints
+    * intact: trunks rebuild under the caller's current session config.
+    * Within one (outermost) fresh scope each trunk key is still built
+    * exactly once, like a production run that writes the artifact once
+    * and reads it everywhere. */
   def fresh[T](body: => T): T = {
     val depth = freshDepth.get
-    if (depth == 0) freshScope.set(new java.util.HashMap[Any, AnyRef])
+    if (depth == 0) freshScope.set(new java.util.HashMap[Any, DataFrame])
     freshDepth.set(depth + 1)
     try body finally {
       freshDepth.set(depth)
@@ -91,26 +87,51 @@ object Materialize {
   }
 
   /** Memoize `build` per `key` for the lifetime of the current [[fresh]]
-    * scope; outside any scope (or in [[transparent]] mode) just builds.
-    * get/put rather than computeIfAbsent so nested trunk dependencies
-    * (stage builds that resolve other stages) cannot trip HashMap's
-    * recursive-update detection. */
-  def scopedMemo[T <: AnyRef](key: Any)(build: => T): T = {
+    * scope; only called inside one. */
+  private def scopedMemo(key: Any)(build: => DataFrame): DataFrame = {
     val m = freshScope.get
-    if (m == null || isTransparent) build
-    else {
-      val hit = m.get(key)
-      if (hit != null) hit.asInstanceOf[T]
-      else { val v = build; m.put(key, v); v }
-    }
+    val hit = m.get(key)
+    if (hit != null) hit
+    else { val v = build; m.put(key, v); v }
   }
 
-  /** Memo-site instrumentation for harnesses: [[noteMemoLookup]] is
-    * called by every cross-query memo cache on every lookup;
-    * [[memoTouched]] reads-and-keeps, [[resetMemoTouched]] clears. */
-  def noteMemoLookup(): Unit = memoSeen.set(true)
-  def memoTouched: Boolean = memoSeen.get
-  def resetMemoTouched(): Unit = memoSeen.set(false)
+  private val trunks =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Any),
+      DataFrame]()
+
+  /** Normal-mode trunk materialization: an eager checkpoint, pinned so
+    * the per-query [[CheckpointHygiene.release]] sweep never drops a
+    * truncated-lineage frame later queries still read. Only the
+    * returned frame's RDD is pinned; checkpoints taken inside the build
+    * stay releasable. */
+  private def pinnedCheckpoint(df: DataFrame): DataFrame =
+    CheckpointHygiene.pin(df.trunkCheckpoint())
+
+  /** The session trunk for `key` (namespace keys per module, e.g.
+    * `("GraphTrunk", dir, "co_edges")`): built once per session and
+    * handed out by reference; see the object doc for the per-mode
+    * behaviour. `materialize` is the normal-mode materialization of
+    * the build (default [[pinnedCheckpoint]]).
+    *
+    * Lookup is get → build → putIfAbsent, so a build may resolve other
+    * trunks. Two threads racing on one key may both build; the first
+    * insert wins and every caller gets that frame. */
+  def trunk(s: SparkSession, key: Any,
+      materialize: DataFrame => DataFrame = pinnedCheckpoint)(
+      build: => DataFrame): DataFrame =
+    if (isTransparent) build
+    else if (freshDepth.get > 0)
+      scopedMemo((s, key)) { build.trunkCheckpoint() }
+    else {
+      val k = (s, key)
+      val hit = trunks.get(k)
+      if (hit != null) hit
+      else {
+        val v = materialize(build)
+        val won = trunks.putIfAbsent(k, v)
+        if (won == null) v else won
+      }
+    }
 
   /** Pre-truncation analyzed plan of each checkpoint, by RDD id.
     * Bounded: one small plan tree per checkpoint in the session (the

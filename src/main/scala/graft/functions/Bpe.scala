@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.CheckpointHygiene
 import graft.Materialize.TrunkCheckpointOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -95,20 +96,12 @@ object Bpe {
       .trunkCheckpoint(eager = false)
     val snaps = scala.collection.mutable.Map.empty[Int, DataFrame]
     val kept = scala.collection.mutable.Set.empty[DataFrame]
+    // The new checkpoint is materialized; drop the previous round's
+    // blocks so R-round training holds one word-table copy in memory,
+    // not R of them (a 30k-merge vocab run would otherwise accumulate
+    // 30k cached copies) — unless a snapshot still hands the frame out.
     def drop(prev: DataFrame): Unit =
-      // The new checkpoint is materialized; drop the previous round's
-      // blocks so R-round training holds one word-table copy in
-      // memory, not R of them (a 30k-merge vocab run would otherwise
-      // accumulate 30k cached copies) — unless a snapshot still hands
-      // the frame out. Dataset.unpersist only clears CacheManager
-      // entries — checkpoint blocks are RDD storage, so unpersist the
-      // LogicalRDD's RDD directly (waiting for the ContextCleaner to
-      // GC them is unbounded).
-      if (!kept.contains(prev)) prev.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => prev.unpersist(blocking = false)
-      }
+      if (!kept.contains(prev)) CheckpointHygiene.drop(prev)
     val merges = Seq.newBuilder[(Int, String, String, String)]
     var round = 0
     var exhausted = false
@@ -156,6 +149,10 @@ object Bpe {
         if (snapshotAt.contains(round)) { snaps(round) = syms; kept += syms }
       }
     }
+    // loop exit: the last generation and the final pc are dead — pc is
+    // never returned, and unless exhausted it never even materialized
+    dropAfterArgmax.foreach(drop)
+    drop(pc)
     (merges.result().toDF("round", "left", "right", "merged"), syms,
       snaps.toMap)
   }

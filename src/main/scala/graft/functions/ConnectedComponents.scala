@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.CheckpointHygiene
 import graft.Materialize.TrunkCheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -60,6 +61,9 @@ object ConnectedComponents {
         .groupBy("id").agg(min("component").as("component"))
         .trunkCheckpoint()
       val ns = signature(next)
+      // the superseded generation is dead once next is materialized
+      // and signed: R rounds hold one label copy, not R
+      CheckpointHygiene.drop(labels)
       labels = next
       // i == 0 guard: the initial self-labels frame is never signed
       // (sig starts as a sentinel), so round 1's comparison is always
@@ -68,6 +72,8 @@ object ConnectedComponents {
       sig = ns
       i += 1
     }
+    // the result reads only the final labels and `touched`
+    CheckpointHygiene.drop(both)
     labels.unionByName(
       nodes.join(touched, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("component")))

@@ -1,9 +1,9 @@
 package graft.plans
 
 /** Declared per-query [[ScaleGuard]] allowances for the registry —
-  * the single source of truth consumed by BOTH the bench harness's
-  * continuous cliff sweep and PlanSpec's suite-wide assertions, so the
-  * two can't drift.
+  * the single source of truth for PlanSpec's suite-wide assertions
+  * (the ScaleGuard sweep over every registered query and the window /
+  * cartesian whitelists), so they can't drift apart.
   *
   * Every entry is a deliberate, structurally-bounded exception to a
   * ScaleGuard class, documented at the granting site:

@@ -46,13 +46,16 @@ object Corpus {
   val heldoutCrossEntropy: Q = (s, dir) => heldoutScores(s, dir)
 
   /** (doc_id, n_pairs, mean_nll_micro) for every held-out doc — q227's
-    * body, shared with q441's band filter. Memoized per (session, dir)
-    * via GraphTrunk.stage: in a CCNet-shaped pipeline the per-doc LM
-    * score table is a persisted artifact every downstream filter reads
-    * — q227 and q441 each rebuilt the whole train/score chain, and
-    * q441 additionally read it twice (cell census + band tagging). */
+    * body, shared with q441's band filter. A session trunk
+    * ([[graft.Materialize.trunk]]): in a CCNet-shaped pipeline the
+    * per-doc LM score table is a persisted artifact every downstream
+    * filter reads — q227 and q441 each rebuilt the whole train/score
+    * chain, and q441 additionally read it twice (cell census + band
+    * tagging). */
   private def heldoutScores(s: SparkSession, dir: String): DataFrame =
-    GraphTrunk.stage(s, dir, "heldout_scores") { heldoutScoresBuild(s, dir) }
+    graft.Materialize.trunk(s, ("Corpus", dir, "heldout_scores")) {
+      heldoutScoresBuild(s, dir)
+    }
 
   private def heldoutScoresBuild(s: SparkSession,
       dir: String): DataFrame = {

@@ -1,9 +1,8 @@
 package graft.queries
 
-import graft.Materialize.TrunkCheckpointOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Materialize, Tables}
 
 /** Shared graph trunks for the graph-kernel query family.
   *
@@ -21,13 +20,10 @@ import graft.Tables
   *    lineitem scan + distinct per consumer.
   *
   * In a production pipeline these are persisted artifacts (the same §4
-  * materialization boundary as the news trunk, `NewsPipeline.trunkCache`):
-  * an edge table is written once per ingest and every kernel reads it.
-  * Mirror that here by materializing each frame once per (session, dir)
-  * via eager `localCheckpoint`, pinned so the per-query
-  * [[graft.CheckpointHygiene.release]] sweep never drops a
-  * truncated-lineage frame other queries still read (the near-dup group
-  * trunk's contract, `TrainingData.nearDupGroups`).
+  * materialization boundary as the news trunk): an edge table is
+  * written once per ingest and every kernel reads it. Each frame is a
+  * session trunk ([[graft.Materialize.trunk]], key `("GraphTrunk", dir,
+  * stage)`), built once per session and shared by every consumer.
   *
   * Scale posture: at 100 TB each frame is O(edges) — far smaller than
   * the fact table it projects — and the checkpoint is exactly the
@@ -37,35 +33,12 @@ import graft.Tables
   */
 object GraphTrunk {
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
-
-  /** Memoize `build` per (session, dir, stage), eagerly local-
-    * checkpointed and pinned. Dependencies between stages must be
-    * resolved BEFORE entering the cache (nested computeIfAbsent on a
-    * shared hash bin throws "Recursive update" — see
-    * NewsPipeline.articlesShared). */
-  private def cached(s: SparkSession, dir: String, stage: String)(
-      build: => DataFrame): DataFrame = {
-    graft.Materialize.noteMemoLookup()
-    if (graft.Materialize.isTransparent) build // full lineage, no memo
-    else if (graft.Materialize.bypassMemo)
-      // fresh mode: rebuilt, unpinned; memoized only for the life of
-      // the enclosing fresh scope (one build per timed/perturbed run)
-      graft.Materialize.scopedMemo((s, dir, stage)) {
-        build.trunkCheckpoint()
-      }
-    else cache.computeIfAbsent((s, dir, stage), _ =>
-      graft.CheckpointHygiene.pinning(s) { build.trunkCheckpoint() })
-  }
-
   /** Distinct co-order part edges, lower id first: (u < v). One
     * per-order self-join + one distinct, shared by the whole co-order
     * family. */
   private[queries] def coOrderEdges(s: SparkSession,
       dir: String): DataFrame =
-    cached(s, dir, "co_edges") {
+    Materialize.trunk(s, ("GraphTrunk", dir, "co_edges")) {
       import s.implicits._
       val io = Tables(s, dir, "lineitem")
         .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
@@ -76,26 +49,25 @@ object GraphTrunk {
 
   /** Undirected node degrees of the co-order graph: (nid, d). */
   private[queries] def coOrderDegrees(s: SparkSession,
-      dir: String): DataFrame = {
-    val e = coOrderEdges(s, dir)
-    cached(s, dir, "co_deg") {
+      dir: String): DataFrame =
+    Materialize.trunk(s, ("GraphTrunk", dir, "co_deg")) {
       import s.implicits._
+      val e = coOrderEdges(s, dir)
       e.select($"u".as("nid"))
         .unionByName(e.select($"v".as("nid")))
         .groupBy($"nid").agg(count(lit(1)).as("d"))
     }
-  }
 
   /** Degree-oriented sorted adjacency (Schank–Wagner node-iterator
     * orientation): (a, nbrs = sorted N⁺(a)). Every triangle appears
     * exactly once as c ∈ N⁺(a) ∩ N⁺(b) on DAG edge (a, b), with
     * out-degree ≤ O(√m) — shared by q105 and q259. */
   private[queries] def coOrderAdjacency(s: SparkSession,
-      dir: String): DataFrame = {
-    val e = coOrderEdges(s, dir)
-    val deg = coOrderDegrees(s, dir)
-    cached(s, dir, "co_adj") {
+      dir: String): DataFrame =
+    Materialize.trunk(s, ("GraphTrunk", dir, "co_adj")) {
       import s.implicits._
+      val e = coOrderEdges(s, dir)
+      val deg = coOrderDegrees(s, dir)
       val ori = e
         .join(deg.select($"nid".as("u"), $"d".as("du")), Seq("u"))
         .join(deg.select($"nid".as("v"), $"d".as("dv")), Seq("v"))
@@ -107,23 +79,16 @@ object GraphTrunk {
       ori.groupBy($"a")
         .agg(sort_array(collect_list($"b")).as("nbrs"))
     }
-  }
 
   /** Distinct supplier→part bipartite edges with the part-id offset
     * the kernels use: (src = l_suppkey, dst = 100000 + l_partkey). */
   private[queries] def suppPartEdges(s: SparkSession,
       dir: String): DataFrame =
-    cached(s, dir, "bip_edges") {
+    Materialize.trunk(s, ("GraphTrunk", dir, "bip_edges")) {
       import s.implicits._
       Tables(s, dir, "lineitem")
         .select($"l_suppkey".as("src"),
           (lit(100000L) + $"l_partkey").as("dst"))
         .distinct()
     }
-
-  /** Memoized result of an arbitrary graph-family stage (e.g. q118's
-    * LPA labels, reused verbatim by q130's modularity audit). */
-  private[queries] def stage(s: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame =
-    cached(s, dir, name)(build)
 }

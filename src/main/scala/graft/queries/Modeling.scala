@@ -39,12 +39,14 @@ object Modeling {
     * back by key, and the top-3 window partitions by item — nothing
     * global at any catalog size. Cosine² is exact: nij²·1e12 div
     * (ni·nj) in decimal(38,0). */
-  // memoized per (session, dir): q398's coverage/Gini audit re-ran this
-  // whole chain (basket self-join + pair shuffle + top-3 window) inline
-  // — the same persisted-serving-table boundary GraphTrunk gives the
-  // graph kernels. O(catalog × 3) rows, so the pin is cheap.
+  // a session trunk: q398's coverage/Gini audit re-ran this whole
+  // chain (basket self-join + pair shuffle + top-3 window) inline — the
+  // same persisted-serving-table boundary GraphTrunk gives the graph
+  // kernels. O(catalog × 3) rows, so the pin is cheap.
   val itemCfTopk: Q = (s, dir) =>
-    GraphTrunk.stage(s, dir, "cf_serving") { itemCfTopkBuild(s, dir) }
+    graft.Materialize.trunk(s, ("Modeling", dir, "cf_serving")) {
+      itemCfTopkBuild(s, dir)
+    }
 
   private def itemCfTopkBuild(s: SparkSession, dir: String) = {
     import s.implicits._

@@ -23,51 +23,31 @@ object NewsPipeline {
   /** The `transformed` view and the articles mart are the shared trunk of
     * four queries (q33/q34/q36/q39) — the pipeline's materialization
     * boundary (SURVEY §4): in the reference these are dbt tables written
-    * once per run, not recomputed per consumer. Mirror that here by
-    * persisting the trunk once per (session, data dir); the mart fan-out
-    * then reads the cached frame instead of re-running the backfill
-    * window chain (the single most expensive lineage in the suite — at
-    * sf1 it was ~78 s of a 330 s bench when computed four times).
-    * MEMORY_AND_DISK: the frame is O(articles), far below executor
-    * memory at test SF, and spills instead of OOMing at scale. */
-  private val trunkCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      DataFrame]()
+    * once per run, not recomputed per consumer. Each is a session trunk
+    * ([[graft.Materialize.trunk]]); the mart fan-out then reads the
+    * materialized frame instead of re-running the backfill window chain
+    * (the single most expensive lineage in the suite — at sf1 it was
+    * ~78 s of a 330 s bench when computed four times).
+    *
+    * Normal mode persists MEMORY_AND_DISK instead of checkpointing: the
+    * frame keeps its lineage, so lost blocks recompute, and consumers
+    * see an `InMemoryRelation` whose build side PlanQuality classifies
+    * by the real backfill plan (a checkpoint scan would count as
+    * reduced and loosen PlanSpec's nested-loop gate for q33–q39). The
+    * frame is O(articles), far below executor memory at test SF, and
+    * spills instead of OOMing at scale. */
   private def cached(s: SparkSession, dir: String, stage: String)
-      (build: => DataFrame): DataFrame = {
-    // tool modes (Materialize.transparent / fresh): bypass the memo AND
-    // the persist, so a perturbation run rebuilds the trunk under the
-    // perturbed session config instead of reading a frame persisted
-    // under the default one — same contract as GraphTrunk.cached.
-    // In fresh mode the rebuild is checkpointed and memoized for the
-    // life of the fresh SCOPE (one build per timed/perturbed run —
-    // bare `build` re-executed the backfill chain once per consuming
-    // plan branch, overcharging fresh-timed runs), and released at the
-    // next query boundary like any unpinned checkpoint.
-    graft.Materialize.noteMemoLookup()
-    if (graft.Materialize.isTransparent) build
-    else if (graft.Materialize.bypassMemo)
-      graft.Materialize.scopedMemo((s, dir, stage, "news")) {
-        graft.Materialize.TrunkCheckpointOps(build).trunkCheckpoint()
-      }
-    else trunkCache.computeIfAbsent((s, dir, stage), _ =>
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+      (build: => DataFrame): DataFrame =
+    graft.Materialize.trunk(s, ("NewsPipeline", dir, stage),
+      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(build)
 
   private def transformedShared(s: SparkSession, dir: String): DataFrame =
     cached(s, dir, "transformed")(
       NewsTransform.transformed(rawNews(s, dir), LoadTs))
 
-  private def articlesShared(s: SparkSession, dir: String): DataFrame = {
-    // resolve the dependency BEFORE entering the cache: a nested
-    // computeIfAbsent on the same ConcurrentHashMap throws
-    // "Recursive update" whenever the two keys share a hash bin —
-    // which depends on the per-JVM SparkSession identity hash, so it
-    // strikes intermittently (first seen on a 345-query Verify run
-    // after many green runs)
-    val trunk = transformedShared(s, dir)
-    cached(s, dir, "articles")(NewsTransform.articlesMart(trunk))
-  }
+  private def articlesShared(s: SparkSession, dir: String): DataFrame =
+    cached(s, dir, "articles")(
+      NewsTransform.articlesMart(transformedShared(s, dir)))
 
   /** Synthetic raw_news: events drive cardinality/keys, documents supply
     * content. Every edge case from FIXTURES.md §1 is planted

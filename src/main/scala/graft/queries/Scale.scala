@@ -1674,13 +1674,10 @@ object Scale {
     * with a signature early-exit, spec-asserted equal when capped. */
   val lpaCommunities: Q = (s, dir) => {
     import s.implicits._
-    // resolve the edge dependency BEFORE entering the stage cache —
-    // nested computeIfAbsent on the shared trunk map can throw
-    // "Recursive update" (see NewsPipeline.articlesShared)
-    val e0 = GraphTrunk.suppPartEdges(s, dir)
-    // labels memoized on the trunk: q130's modularity audit reuses the
+    // labels are a session trunk: q130's modularity audit reuses the
     // identical frame instead of re-running both LPA rounds
-    GraphTrunk.stage(s, dir, "lpa_labels") {
+    graft.Materialize.trunk(s, ("Scale", dir, "lpa_labels")) {
+      val e0 = GraphTrunk.suppPartEdges(s, dir)
       val edges = e0.unionByName(
         e0.select($"dst".as("src"), $"src".as("dst")))
       val l0 = edges.select($"src".as("node_id")).distinct()

@@ -243,8 +243,8 @@ class PlanSpec extends SparkSpec {
     // Zipf-collapsed vocabulary, q207/q216 on retrieval top-k lists.
     // A NEW query showing up in this set is a scale regression: fix it
     // (rangeCumSum/rangeNtile/rangeCumMax) or justify it here.
-    // single source of truth shared with the bench harness's continuous
-    // ScaleGuard sweep (graft.plans.PlanContracts documents each grant)
+    // single source of truth shared with the ScaleGuard sweep below
+    // (graft.plans.PlanContracts documents each grant)
     val whitelist = graft.plans.PlanContracts.allowances.collect {
       case (name, classes) if classes("globalWindow") => name
     }.toSet
@@ -271,7 +271,10 @@ class PlanSpec extends SparkSpec {
     // classification shared with the committed PLAN_AUDIT.md table.
     // Cartesian whitelist: q177's Theil-Sen pair expansion runs on the
     // per-day aggregate (O(days)^2, calendar-bounded). Shared with the
-    // bench harness's ScaleGuard sweep via PlanContracts.
+    // ScaleGuard sweep via PlanContracts. That sweep checks every
+    // query's ANALYZED plan for the cliff classes (global window,
+    // non-equi cross join, single-partition repartition) minus the
+    // query's declared allowances.
     val cartesianOk = graft.plans.PlanContracts.allowances.collect {
       case (name, classes) if classes("crossJoin") => name
     }.toSet
@@ -282,16 +285,24 @@ class PlanSpec extends SparkSpec {
     try {
       val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
         case (name, fn) =>
-          val p = fn(spark, sfDir).queryExecution.executedPlan
+          val df = fn(spark, sfDir)
+          val p = df.queryExecution.executedPlan
           val bad = graft.plans.PlanQuality.unreducedBnljs(p)
           val carts = graft.plans.PlanQuality.cartesians(p)
+          val guard = graft.plans.ScaleGuard
+            .findings(df.queryExecution.analyzed)
+            .filterNot(graft.plans.PlanContracts.allowances
+              .getOrElse(name, Set.empty[String]))
           if (bad > 0) Some(s"$name: $bad unreduced BNLJ")
           else if (carts > 0 && !cartesianOk(name))
             Some(s"$name: $carts cartesian")
+          else if (guard.nonEmpty)
+            Some(s"$name: ScaleGuard ${guard.mkString(",")}")
           else None
       }
       assert(offenders.isEmpty,
-        s"corpus-shaped nested loops (OOM cliff at 100 TB): $offenders")
+        s"corpus-shaped nested loops or ScaleGuard findings " +
+          s"(OOM cliff at 100 TB): $offenders")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 

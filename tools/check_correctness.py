@@ -37,7 +37,7 @@ def main(sf_dir, out_dir):
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
-    # same filter semantics as graft.Verify/Bench: only check queries
+    # same filter semantics as graft.Verify: only check queries
     # whose name starts with SPARK_GRAFT_ONLY (comma-separable)
     only = [p for p in os.environ.get("SPARK_GRAFT_ONLY", "").split(",") if p]
     if only:
