@@ -2,9 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for a comma-separated list of
-  * registered queries to `<outDir>/<name>.txt` — one session for the
-  * whole batch (graft.Explain pays a JVM+session per query).
-  * `runMain graft.ExplainDump <outDir> <q1,q2,...> [sfDir]` */
+  * registered queries (or `ALL`) to `<outDir>/<name>.txt`, one session
+  * for the whole batch. Timing lives in `perfbench/`.
+  * `runMain graft.ExplainDump <outDir> <q1,q2,...|ALL> [sfDir]` */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)

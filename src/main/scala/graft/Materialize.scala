@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -45,6 +46,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    instead of reading a frame materialized under the default
   *    config. Each key is built once per fresh scope, unpinned —
   *    CheckpointHygiene.release reclaims it at the next query boundary.
+  *
+  * CONVERGENCE LOOPS ([[fixpoint]]): every iterative kernel that runs a
+  * relational round to a fixpoint (connected components, LPA, k-core,
+  * k-truss) hands its round to [[fixpoint]], the one place that decides
+  * per-round checkpointing, the convergence probe, the drop of
+  * superseded generations and the iteration cap.
   */
 object Materialize {
 
@@ -132,6 +139,47 @@ object Materialize {
         if (won == null) v else won
       }
     }
+
+  /** Iterate `step` from `init` until a round leaves the frame unchanged
+    * or `maxIter` steps have run. Returns (final frame, number of steps
+    * that changed the frame, converged?).
+    *
+    * Every frame `step` returns is [[trunkCheckpoint]]ed, so plans
+    * never grow with the round count. The checkpoint is lazy: its
+    * first action is the round's signature job, which materializes it
+    * in the same pass instead of a separate eager count job per round
+    * (Bpe's pair-count pattern). Convergence is probed as
+    * (count, bit_xor of xxhash64 over all columns) against the previous
+    * generation: two scalars per round instead of a full-set anti-join.
+    * XOR is order-independent and cannot overflow; equal signatures on
+    * consecutive rounds = fixpoint w.h.p. for set-valued frames, and
+    * exactly for kernels whose round only removes rows (k-core,
+    * k-truss: equal counts already imply equal sets). Each superseded
+    * generation the driver created is dropped as soon as its successor
+    * is signed, so R rounds hold one copy, not R. `init` belongs to the
+    * caller and is never dropped. */
+  def fixpoint(init: DataFrame, maxIter: Int)(
+      step: DataFrame => DataFrame): (DataFrame, Int, Boolean) = {
+    def signature(d: DataFrame): (Long, Long) = {
+      val r = d.agg(count(lit(1)),
+        bit_xor(xxhash64(d.columns.toSeq.map(col): _*))).head()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+    var cur = init
+    var sig = signature(init)
+    var steps = 0
+    var converged = false
+    while (!converged && steps < maxIter) {
+      val next = step(cur).trunkCheckpoint(eager = false)
+      val ns = signature(next)
+      if (!(cur eq init)) CheckpointHygiene.drop(cur)
+      converged = ns == sig
+      sig = ns
+      cur = next
+      steps += 1
+    }
+    (cur, if (converged) steps - 1 else steps, converged)
+  }
 
   /** Pre-truncation analyzed plan of each checkpoint, by RDD id.
     * Bounded: one small plan tree per checkpoint in the session (the

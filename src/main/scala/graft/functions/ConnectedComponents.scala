@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.CheckpointHygiene
+import graft.{CheckpointHygiene, Materialize}
 import graft.Materialize.TrunkCheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * alternating small-star/large-star algorithm (Kiveris et al. 2014)
   * that a billion-node web graph would call for; [[largeSmallStar]] IS
   * that swap, same (id, component) contract, for deep graphs.
-  * `localCheckpoint` truncates the lineage each round — without it the
-  * plan doubles per iteration and the driver, not the data, becomes
-  * the bottleneck.
+  * Both loop their round through [[graft.Materialize.fixpoint]], which
+  * owns the per-round checkpoint, the convergence probe and the drop
+  * of superseded generations.
   */
 object ConnectedComponents {
 
@@ -37,40 +37,13 @@ object ConnectedComponents {
     // change. Singletons are appended unchanged at the end.
     val touched = both.select(col("src").as("id")).distinct()
       .trunkCheckpoint()
-    var labels = touched.select(col("id"), col("id").as("component"))
-      .trunkCheckpoint()
-    // convergence = label-frame fixpoint, probed as (count, hash-xor)
-    // — the same two-scalar signature largeSmallStar and lpa use. One
-    // agg pass over the just-checkpointed frame replaces the former
-    // two-sided join probe (next ⋈ labels is a whole extra shuffle job
-    // per round on exactly the suite's hottest iterative path). The
-    // node set never changes, so equal signatures on consecutive
-    // rounds = fixpoint w.h.p.; maxIter backstops.
-    def signature(d: DataFrame): (Long, Long) = {
-      val r = d.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(id, component))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var sig = (-1L, 0L)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val viaNeighbour = labels.join(both, labels("id") === both("src"))
-        .select(col("dst").as("id"), col("component"))
-      val next = labels.unionByName(viaNeighbour)
-        .groupBy("id").agg(min("component").as("component"))
-        .trunkCheckpoint()
-      val ns = signature(next)
-      // the superseded generation is dead once next is materialized
-      // and signed: R rounds hold one label copy, not R
-      CheckpointHygiene.drop(labels)
-      labels = next
-      // i == 0 guard: the initial self-labels frame is never signed
-      // (sig starts as a sentinel), so round 1's comparison is always
-      // against round 0's REAL signature
-      converged = i > 0 && ns == sig
-      sig = ns
-      i += 1
+    val (labels, _, _) = Materialize.fixpoint(
+        touched.select(col("id"), col("id").as("component")), maxIter) {
+      cur =>
+        val viaNeighbour = cur.join(both, cur("id") === both("src"))
+          .select(col("dst").as("id"), col("component"))
+        cur.unionByName(viaNeighbour)
+          .groupBy("id").agg(min("component").as("component"))
     }
     // the result reads only the final labels and `touched`
     CheckpointHygiene.drop(both)
@@ -158,25 +131,12 @@ object ConnectedComponents {
     */
   def largeSmallStar(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 30): DataFrame = {
-    var e = edges.select(col("src"), col("dst"))
+    val e0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct().trunkCheckpoint()
-    val touched = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
+    val touched = e0.select(col("src").as("id"))
+      .unionByName(e0.select(col("dst").as("id")))
       .distinct().trunkCheckpoint()
-    // convergence = edge-set fixpoint, probed as (count, hash-xor) —
-    // two scalars per round instead of a full-set anti-join. XOR is
-    // order-independent and can't overflow (the set is distinct, so no
-    // duplicate-cancellation blind spot); equal signatures on
-    // consecutive rounds = fixpoint w.h.p., and maxIter backstops.
-    def checksum(d: DataFrame): (Long, Long) = {
-      val r = d.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(src, dst))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var sig = (-1L, 0L)
-    var i = 0
-    var done = false
-    while (!done && i < maxIter) {
+    val (stars, _, _) = Materialize.fixpoint(e0, maxIter) { e =>
       // ---- large-star: m(u) = min over u's CLOSED neighbourhood;
       // each neighbour v > u re-attaches as (v, m). Emitting only the
       // larger side keeps every edge pointing downhill (no cycles).
@@ -194,23 +154,20 @@ object ConnectedComponents {
       val o = ls.select(greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       val ssMin = o.groupBy("u").agg(min(col("v")).as("m"))
-      val ss = o.join(ssMin, "u")
+      o.join(ssMin, "u")
         .select(col("u").as("src"), col("m").as("dst"))
         .unionByName(o.join(ssMin, "u")
           .filter(col("v") =!= col("m"))
           .select(col("v").as("src"), col("m").as("dst")))
-        .distinct().trunkCheckpoint()
-      val next = checksum(ss)
-      done = next == sig
-      sig = next
-      e = ss
-      i += 1
+        .distinct()
     }
+    // the result reads only the final edges and `touched`
+    CheckpointHygiene.drop(e0)
     // fixpoint edges are star edges child→root; roots never appear on
     // the left (small-star only emits src > dst).
-    val labels = e.select(col("src").as("id"), col("dst").as("component"))
+    val labels = stars.select(col("src").as("id"), col("dst").as("component"))
     val roots = touched.join(
-        e.select(col("src").as("id")), Seq("id"), "left_anti")
+        stars.select(col("src").as("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("component"))
     labels.unionByName(roots).unionByName(
       nodes.join(touched, Seq("id"), "left_anti")

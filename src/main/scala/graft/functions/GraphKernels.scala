@@ -1,30 +1,29 @@
 package graft.functions
 
+import graft.{CheckpointHygiene, Materialize}
 import graft.Materialize.TrunkCheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixpoint-loop drivers for the graph kernels that ship as bounded
   * unrollings in the query suite (q107 BFS, q109 k-core, q118 LPA —
-  * the unrolls keep their DuckDB oracles expressible). Each loop runs
-  * the SAME relational round as its unrolled query and adds the
-  * convergence probe a full-scale run needs:
-  *
-  *  - BFS: stop when the frontier is empty (one count per round);
-  *  - k-core: stop when the edge count stops shrinking — the peel
-  *    only ever removes edges, so a stable count IS set fixpoint;
-  *  - LPA: stop when the label signature (count, bit_xor of
-  *    xxhash64(node, label)) repeats — the same two-scalar probe as
-  *    [[ConnectedComponents.largeSmallStar]], order-independent and
-  *    collision-safe w.h.p., with maxRounds as the backstop.
-  *
-  * Lineage is truncated every round (localCheckpoint) so plans never
-  * grow with the iteration count; at very high round counts a
-  * production loop would additionally unpersist the previous round's
-  * checkpoint blocks (the q98 BPE caveat). Spec-asserted equal to the
-  * unrolled query forms when capped to the same round count
-  * (ScaleSpec). */
+  * the unrolls keep their DuckDB oracles expressible). Each round is
+  * defined once here ([[bfsExpand]], [[kcorePeel]], [[lpaRound]]): the
+  * unrolled queries call it a fixed number of times, the kernels loop
+  * it. k-core and LPA loop through [[graft.Materialize.fixpoint]]
+  * (checkpoint, convergence probe, drop of superseded generations);
+  * BFS carries two frames per round and stops when the frontier is
+  * empty. Spec-asserted equal to the unrolled query forms when capped
+  * to the same round count (ScaleSpec). */
 object GraphKernels {
+
+  /** One BFS round: the nodes one hop out of `frontier` that are not
+    * in `visited` (both one column `node_id`). */
+  def bfsExpand(edges: DataFrame, frontier: DataFrame,
+      visited: DataFrame): DataFrame =
+    edges.join(frontier.select(col("node_id").as("src")), Seq("src"))
+      .select(col("dst").as("node_id")).distinct()
+      .join(visited, Seq("node_id"), "left_anti")
 
   /** Multi-source BFS hop distances over a (src, dst) edge list
     * (pass both directions for an undirected graph). Returns
@@ -39,81 +38,65 @@ object GraphKernels {
     var frontierSize = frontier.count()
     while (frontierSize > 0 && hop < maxHops) {
       hop += 1
-      val next = edges
-        .join(frontier.select(col("node_id").as("src")), Seq("src"))
-        .select(col("dst").as("node_id")).distinct()
-        .join(visited.select("node_id"), Seq("node_id"), "left_anti")
+      val next = bfsExpand(edges, frontier, visited.select("node_id"))
         .trunkCheckpoint()
       frontierSize = next.count()
+      CheckpointHygiene.drop(frontier)
       if (frontierSize > 0) {
-        visited = visited
+        val grown = visited
           .unionByName(next.withColumn("hops", lit(hop)))
           .trunkCheckpoint()
-        frontier = next
+        CheckpointHygiene.drop(visited)
+        visited = grown
       }
+      frontier = next
     }
+    // the result reads only `visited`
+    CheckpointHygiene.drop(frontier)
     visited
+  }
+
+  /** One k-core peel round over a bidirectional (u, v) edge set: drop
+    * every edge with an endpoint of degree < k. One degree agg + two
+    * semi-joins, all keyed on node id. */
+  def kcorePeel(k: Int)(edges: DataFrame): DataFrame = {
+    val keep = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
+      .filter(col("d") >= k).select(col("u").as("n"))
+    edges.join(keep.select(col("n").as("u")), Seq("u"))
+      .join(keep.select(col("n").as("v")), Seq("v"))
+      .select(col("u"), col("v"))
   }
 
   /** k-core: peel degree-<k nodes until nothing drops (or maxIter).
     * `edges` must hold both directions; returns the surviving
-    * bidirectional edge set. One degree agg + two semi-joins per
-    * round, all keyed on node id — q109's round, looped. */
+    * bidirectional edge set — q109's round, looped. */
   def kcore(edges: DataFrame, k: Int,
-      maxIter: Int = Int.MaxValue): DataFrame = {
-    var e = edges.select(col("u"), col("v")).trunkCheckpoint()
-    var prevCount = e.count()
-    var i = 0
-    var done = prevCount == 0
-    while (!done && i < maxIter) {
-      val keep = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("u").as("n"))
-      val next = e.join(keep.select(col("n").as("u")), Seq("u"))
-        .join(keep.select(col("n").as("v")), Seq("v"))
-        .select(col("u"), col("v")).trunkCheckpoint()
-      val c = next.count()
-      done = c == prevCount // monotone shrink: equal count = fixpoint
-      prevCount = c
-      e = next
-      i += 1
-    }
-    e
+      maxIter: Int = Int.MaxValue): DataFrame =
+    Materialize.fixpoint(edges.select(col("u"), col("v")), maxIter)(
+      kcorePeel(k))._1
+
+  /** One semi-synchronous LPA round: every node adopts the mode of its
+    * neighbours' `labels` (node_id, lbl), ties to the smallest label —
+    * deterministic. One edge⋈labels join, one (node, label) count and
+    * one per-node argmax. */
+  def lpaRound(edges: DataFrame)(labels: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("node_id"))
+      .orderBy(col("c").desc, col("lbl").asc)
+    edges.join(labels.select(col("node_id").as("dst"), col("lbl")),
+        Seq("dst"))
+      .groupBy(col("src").as("node_id"), col("lbl"))
+      .agg(count(lit(1)).as("c"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("node_id"), col("lbl"))
   }
 
-  /** Semi-synchronous LPA to label fixpoint: every node adopts the
-    * mode of its neighbours' previous-round labels (ties to smallest
-    * label — deterministic). Returns (node_id, lbl). q118's round,
-    * looped with the signature early-exit. */
+  /** Semi-synchronous LPA to label fixpoint (or maxRounds). Returns
+    * (node_id, lbl) — q118's round, looped. */
   def lpa(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def signature(labels: DataFrame): (Long, Long) = {
-      val r = labels.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(node_id, lbl))")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    var labels = edges.select(col("src").as("node_id")).distinct()
-      .withColumn("lbl", col("node_id")).trunkCheckpoint()
-    var sig = signature(labels)
-    var i = 0
-    var done = false
-    while (!done && i < maxRounds) {
-      val w = Window.partitionBy(col("node_id"))
-        .orderBy(col("c").desc, col("lbl").asc)
-      val next = edges
-        .join(labels.select(col("node_id").as("dst"), col("lbl")),
-          Seq("dst"))
-        .groupBy(col("src").as("node_id"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("node_id"), col("lbl"))
-        .trunkCheckpoint()
-      val ns = signature(next)
-      done = ns == sig
-      sig = ns
-      labels = next
-      i += 1
-    }
-    labels
+    val l0 = edges.select(col("src").as("node_id")).distinct()
+      .withColumn("lbl", col("node_id"))
+    Materialize.fixpoint(l0, maxRounds)(lpaRound(edges))._1
   }
 }

@@ -1842,20 +1842,18 @@ object Modeling {
     // count vectors); same value by definition of the explode
     val n = Tables(s, dir, "embeddings").select($"vec_id").distinct()
       .agg(count(lit(1)).as("n"))
-    // Gram matrix without shuffling the exploded frame twice (r11
-    // audit, guide §2.4/§3.1): the old coords⋈coords on vec_id
-    // sort-merge-shuffled 2×O(vecs·dims) rows; the second factor now
-    // rides a BROADCAST of the O(vecs) array-form table (vectors are
-    // dims-bounded — far under the broadcast cap) and fans out via a
-    // codegen posexplode straight into the (di,dj)-keyed partial
-    // aggregate, so the only exchange left is 4096 aggregate rows.
-    val varr = Tables(s, dir, "embeddings")
-      .select($"vec_id", transform($"embedding",
-        x => round(x.cast("double") * 1000000.0).cast("long")).as("vjs"))
-    val pairs = coords
-      .join(broadcast(varr), Seq("vec_id"))
-      .select($"dim".as("di"), $"v".as("vi"),
-        posexplode($"vjs").as(Seq("dj", "vj")))
+    // Gram matrix from each vector alone: posexplode it twice in one
+    // pass, so every (di, dj, vi·vj) product streams straight into the
+    // (di,dj)-keyed partial aggregate — no join, no broadcast, and the
+    // only exchange is 4096 aggregate rows. Both generators explode
+    // the quantizing expression directly, never a projected alias
+    // (an alias input makes Spark infer a size() filter that runs
+    // below the read-time repartition).
+    val quantized = transform($"embedding",
+      x => round(x.cast("double") * 1000000.0).cast("long"))
+    val pairs = Tables(s, dir, "embeddings")
+      .select($"embedding", posexplode(quantized).as(Seq("di", "vi")))
+      .select($"di", $"vi", posexplode(quantized).as(Seq("dj", "vj")))
       .groupBy($"di", $"dj")
       .agg(sum(dec($"vi") * dec($"vj")).as("sij"))
     val sums = coords.groupBy($"dim").agg(sum($"v").as("si"))

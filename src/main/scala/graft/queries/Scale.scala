@@ -5,8 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{AsOfJoin, ConnectedComponents, Hashing, PageRank,
-  RangeJoin, ScaleWindows, Sketches}
+import graft.functions.{AsOfJoin, ConnectedComponents, GraphKernels, Hashing,
+  PageRank, RangeJoin, ScaleWindows, Sketches}
 
 /** Scale-path operators (round 2, beyond the reference's surface): the
   * join/aggregate shapes a 100 TB training-data or analytics run needs
@@ -1682,17 +1682,7 @@ object Scale {
         e0.select($"dst".as("src"), $"src".as("dst")))
       val l0 = edges.select($"src".as("node_id")).distinct()
         .withColumn("lbl", $"node_id")
-      def round(labels: DataFrame): DataFrame = {
-        val w = Window.partitionBy($"node_id")
-          .orderBy($"c".desc, $"lbl".asc)
-        edges.join(labels.select($"node_id".as("dst"), $"lbl"),
-            Seq("dst"))
-          .groupBy($"src".as("node_id"), $"lbl")
-          .agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(w))
-          .filter($"rn" === 1)
-          .select($"node_id", $"lbl")
-      }
+      val round = GraphKernels.lpaRound(edges) _
       round(round(l0)).select($"node_id", $"lbl".as("community"))
     }
   }
@@ -1914,7 +1904,7 @@ object Scale {
     * degree-oriented sorted-adjacency intersect, each triangle
     * crediting its three edges through an output-bound explode, then
     * one support join keeps edges with sup ≥ k−2. */
-  private def trussPeelRound(e: DataFrame): DataFrame = {
+  private[graft] def trussPeelRound(e: DataFrame): DataFrame = {
     val deg = e.select(col("u").as("nid"))
       .unionByName(e.select(col("v").as("nid")))
       .groupBy(col("nid")).agg(count(lit(1)).as("d"))
@@ -1945,25 +1935,22 @@ object Scale {
   }
 
   /** q483 — k-TRUSS to FIXPOINT (the peel-to-convergence variant of
-    * q478, under the same per-round trunkCheckpoint contract): loop
-    * [[trussPeelRound]] until the edge count stops changing. Peeling
-    * only removes edges, so count equality IS set equality — the
-    * convergence test is one driver-side scalar per round (the
-    * Bpe/GD-class justified collect: O(rounds) rows total, never
-    * data), and each round's frame is checkpointed so the next round
-    * starts from a materialized scan, exactly q478's lineage
-    * discipline. Output is the convergence audit row a curation job
-    * logs: effective peel count + fixpoint nodes/edges. The oracle
-    * unrolls 7 rounds (comfortably past the measured sf0.01 fixpoint
-    * at 3 effective peels; post-fixpoint rounds run on the tiny
-    * converged set, near-free) and detects convergence in-SQL from
-    * the per-round count table — if the data ever needed more rounds
-    * than the unroll, `conv` comes back NULL and the gate fails
-    * loudly rather than silently diverging. */
+    * q478): [[graft.Materialize.fixpoint]] loops [[trussPeelRound]]
+    * until the edge set stops changing, checkpointing each round so
+    * the next one starts from a materialized scan, exactly q478's
+    * lineage discipline. Output is the convergence audit row a
+    * curation job logs: effective peel count + fixpoint nodes/edges.
+    * The oracle unrolls 7 rounds (comfortably past the measured
+    * sf0.01 fixpoint at 3 effective peels; post-fixpoint rounds run
+    * on the tiny converged set, near-free) and detects convergence
+    * in-SQL from the per-round count table — if the data ever needed
+    * more rounds than the unroll, `conv` comes back NULL and the gate
+    * fails loudly rather than silently diverging. */
   val ktrussFixpoint: Q = (s, dir) => {
     import s.implicits._
-    val (cur, rounds, converged) =
-      trussFixpointLoop(trussSampledEdges(s, dir), TrussFixCap)
+    val (cur, rounds, converged) = graft.Materialize.fixpoint(
+      trussSampledEdges(s, dir).trunkCheckpoint(), TrussFixCap)(
+      trussPeelRound)
     // cap exit must be DISTINGUISHABLE from convergence (r9 ADVICE):
     // without this, n_rounds == cap over a non-fixpoint frame looks
     // like a valid answer that only the oracle's unroll would reject
@@ -1973,32 +1960,12 @@ object Scale {
     cur.select(explode(array($"u", $"v")).as("nid"))
       .agg(countDistinct($"nid").as("n_nodes"))
       .crossJoin(broadcast(cur.agg(count(lit(1)).as("n_edges"))))
-      .select(lit(rounds).as("n_rounds"), $"n_nodes", $"n_edges")
-  }
-
-  /** q483's peel loop, cap as a parameter so the spec can drive a
-    * forced cap exit. Returns (frame at exit, effective peel rounds,
-    * converged?) — count equality is set equality because peeling
-    * only removes edges. */
-  private[graft] def trussFixpointLoop(
-      edges: DataFrame, cap: Long): (DataFrame, Long, Boolean) = {
-    import graft.Materialize.TrunkCheckpointOps
-    var cur = edges.trunkCheckpoint()
-    var n = cur.count()
-    var rounds = 0L
-    var converged = false
-    while (!converged && rounds < cap) {
-      val next = trussPeelRound(cur).trunkCheckpoint()
-      val m = next.count()
-      if (m == n) converged = true
-      else { cur = next; n = m; rounds += 1 }
-    }
-    (cur, rounds, converged)
+      .select(lit(rounds.toLong).as("n_rounds"), $"n_nodes", $"n_edges")
   }
 
   private val TrussK = 4
   private val TrussSampleMod = 5L
-  private val TrussFixCap = 40L
+  private val TrussFixCap = 40
   private val TrussFixUnroll = 7
 
   // AS MATERIALIZED: each round's CTEs are referenced several times
@@ -2121,10 +2088,7 @@ object Scale {
     val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
     val d0 = Tables(s, dir, "supplier").filter($"s_suppkey" <= 2)
       .select($"s_suppkey".as("node_id"))
-    def expand(frontier: DataFrame, visited: DataFrame): DataFrame =
-      edges.join(frontier.select($"node_id".as("src")), Seq("src"))
-        .select($"dst".as("node_id")).distinct()
-        .join(visited, Seq("node_id"), "left_anti")
+    val expand = GraphKernels.bfsExpand(edges, _, _)
     // per-hop checkpoints: each frontier is read by the next expand,
     // the growing visited anti-join AND the final union — lazy, hop
     // chains nest (88-Exchange plan). O(frontier) node-id rows each.
@@ -2164,13 +2128,7 @@ object Scale {
       edges.agg(countDistinct($"u").as("n_nodes"),
           expr("count(1) div 2").as("n_edges"))
         .select(lit(round).as("round"), $"n_nodes", $"n_edges")
-    def peel(edges: DataFrame): DataFrame = {
-      val keep = edges.groupBy($"u").agg(count(lit(1)).as("d"))
-        .filter($"d" >= k).select($"u".as("n"))
-      edges.join(keep.select($"n".as("u")), Seq("u"))
-        .join(keep.select($"n".as("v")), Seq("v"))
-        .select($"u", $"v")
-    }
+    val peel = GraphKernels.kcorePeel(k) _
     // per-round checkpoints (the q478 k-truss discipline, which
     // post-dates this query): every round frame is read by the next
     // peel (degree agg + two semi-joins) AND its own audit — left

@@ -1,14 +1,15 @@
 package graft
 
 import graft.Materialize.TrunkCheckpointOps
-import graft.functions.{Bpe, ConnectedComponents}
+import graft.functions.{Bpe, ConnectedComponents, GraphKernels}
+import graft.queries.Scale
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The session-trunk seam ([[Materialize.trunk]]) and the checkpoint
-  * drop discipline of the iterative kernels: what stays in block
-  * storage after a trunk build or a kernel call is exactly what a
-  * later reader still needs. */
+/** The session-trunk seam ([[Materialize.trunk]]), the fixpoint driver
+  * ([[Materialize.fixpoint]]) and the checkpoint drop discipline of the
+  * iterative kernels: what stays in block storage after a trunk build
+  * or a kernel call is exactly what a later reader still needs. */
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -77,6 +78,29 @@ class MaterializeSpec extends SparkSpec {
     assert(builds == 2 && !(c eq a))
   }
 
+  test("fixpoint: a cap exit reports converged = false and the " +
+    "changed-step count; the caller's checkpointed init stays readable") {
+    CheckpointHygiene.release(spark)
+    val init = spark.range(10).toDF("id").trunkCheckpoint()
+    val before = persistedIds
+    // every step shifts every id, so only the cap ends the loop
+    val (shifted, n1, conv1) =
+      Materialize.fixpoint(init, 3)(_.select(($"id" + 1).as("id")))
+    assert(!conv1 && n1 == 3, s"cap exit returned ($n1, $conv1)")
+    assert(shifted.as[Long].collect().sorted.toSeq == (3L to 12L))
+    // one shrinking step, then a no-op step: converged after 1 change
+    val (kept, n2, conv2) = Materialize.fixpoint(init, 10)(_.filter($"id" < 5))
+    assert(conv2 && n2 == 1, s"fixpoint returned ($n2, $conv2)")
+    assert(kept.count() == 5)
+    // each loop keeps only the frame it returned; init is never dropped
+    assert(persistedIds -- before == Set(rddId(shifted), rddId(kept)))
+    assert(persistedIds(rddId(init)) && init.count() == 10)
+    // the returned frames are materialized checkpoints, so the
+    // query-boundary sweep reclaims them
+    CheckpointHygiene.release(spark)
+    assert(!persistedIds(rddId(shifted)) && !persistedIds(rddId(kept)))
+  }
+
   test("minLabel and Bpe.train leave behind only the checkpoints " +
     "their result still reads") {
     CheckpointHygiene.release(spark)
@@ -84,19 +108,56 @@ class MaterializeSpec extends SparkSpec {
     // isolated node
     val nodes = (1L to 8L).:+(100L).toDF("id")
     val edges = (1L until 8L).map(i => (i, i + 1)).toDF("src", "dst")
-    val before = persistedIds
-    val labels = ConnectedComponents.minLabel(nodes, edges)
-    val ccGrowth = persistedIds -- before
+    val chainLabels = ((1L to 8L).map(_ -> 1L) :+ (100L -> 100L)).toMap
+    // growth in persisted RDDs across one kernel call
+    def retained[T](kernel: => T): (T, Set[Int]) = {
+      val before = persistedIds
+      val out = kernel
+      (out, persistedIds -- before)
+    }
+    val (labels, ccGrowth) =
+      retained(ConnectedComponents.minLabel(nodes, edges))
     // the result reads the final labels and the touched-node set
     assert(ccGrowth.size <= 2, s"minLabel retained $ccGrowth")
-    assert(labels.as[(Long, Long)].collect().toMap ==
-      ((1L to 8L).map(_ -> 1L) :+ (100L -> 100L)).toMap)
+    assert(labels.as[(Long, Long)].collect().toMap == chainLabels)
+
+    // same two frames for the star-contraction variant: final edges
+    // and the touched-node set
+    val (stars, lssGrowth) =
+      retained(ConnectedComponents.largeSmallStar(nodes, edges))
+    assert(lssGrowth.size <= 2, s"largeSmallStar retained $lssGrowth")
+    assert(stars.as[(Long, Long)].collect().toMap == chainLabels)
+
+    // the graph kernels keep only their final frame
+    val bi = edges.unionByName(edges.select($"dst".as("src"),
+      $"src".as("dst")))
+    val (bfs, bfsGrowth) = retained(GraphKernels.bfsHops(bi,
+      Seq(1L).toDF("node_id")))
+    assert(bfsGrowth.size <= 1, s"bfsHops retained $bfsGrowth")
+    assert(bfs.as[(Long, Int)].collect().toMap ==
+      (1L to 8L).map(i => i -> (i - 1).toInt).toMap)
+    val (lpa, lpaGrowth) = retained(GraphKernels.lpa(bi, maxRounds = 4))
+    assert(lpaGrowth.size <= 1, s"lpa retained $lpaGrowth")
+    assert(lpa.count() == 8)
+    // a 4-clique with a pendant path peels to the clique (its 3-core)
+    val clique = for (a <- 1L to 4L; b <- 1L to 4L if a != b) yield (a, b)
+    val g = (clique ++ Seq((4L, 5L), (5L, 4L), (5L, 6L), (6L, 5L)))
+      .toDF("u", "v")
+    val (core, coreGrowth) = retained(GraphKernels.kcore(g, k = 3))
+    assert(coreGrowth.size <= 1, s"kcore retained $coreGrowth")
+    assert(core.count() == clique.size)
+    // K4 plus a two-round truss cascade (ScaleSpec's k-truss input)
+    val truss = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (4L, 5L), (4L, 6L), (5L, 6L), (5L, 7L), (6L, 7L))
+      .toDF("u", "v")
+    val ((fix, _, _), trussGrowth) =
+      retained(Materialize.fixpoint(truss, 10)(Scale.trussPeelRound))
+    assert(trussGrowth.size <= 1, s"truss fixpoint retained $trussGrowth")
+    assert(fix.count() == 6)
 
     val words = Seq(("banana", 5L), ("bandana", 3L), ("ananas", 2L),
       ("nab", 1L)).toDF("word", "n")
-    val before2 = persistedIds
-    val (merges, syms) = Bpe.train(words, rounds = 4)
-    val bpeGrowth = persistedIds -- before2
+    val ((merges, syms), bpeGrowth) = retained(Bpe.train(words, rounds = 4))
     // merges is a local relation; syms is the final word checkpoint
     assert(bpeGrowth.size <= 1, s"Bpe.train retained $bpeGrowth")
     assert(merges.count() == 4)

@@ -600,11 +600,12 @@ class ScaleSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (4L, 6L), (5L, 6L), (5L, 7L), (6L, 7L))
       .toDF("u", "v")
-    val (_, r1, conv1) = Scale.trussFixpointLoop(edges, 1L)
-    assert(!conv1 && r1 == 1L,
+    val (_, r1, conv1) = Materialize.fixpoint(edges, 1)(Scale.trussPeelRound)
+    assert(!conv1 && r1 == 1,
       s"cap=1 must exit unconverged after 1 round, got ($r1, $conv1)")
-    val (fix, r2, conv2) = Scale.trussFixpointLoop(edges, 10L)
-    assert(conv2 && r2 == 2L, s"expected fixpoint in 2 rounds, got ($r2, $conv2)")
+    val (fix, r2, conv2) =
+      Materialize.fixpoint(edges, 10)(Scale.trussPeelRound)
+    assert(conv2 && r2 == 2, s"expected fixpoint in 2 rounds, got ($r2, $conv2)")
     val kept = fix.as[(Long, Long)].collect().toSet
     assert(kept == Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L),
       (2L, 4L), (3L, 4L)), s"fixpoint edge set was $kept")
