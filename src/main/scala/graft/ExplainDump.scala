@@ -1,9 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for a comma-separated list of
   * registered queries (or `ALL`) to `<outDir>/<name>.txt`, one session
-  * for the whole batch. Timing lives in `perfbench/`.
+  * for the whole batch, set up like Verify's
+  * ([[SessionTuning.runnerSession]]) so the plans are the ones Verify
+  * runs. Timing lives in `perfbench/`.
   * `runMain graft.ExplainDump <outDir> <q1,q2,...|ALL> [sfDir]` */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -12,15 +13,7 @@ object ExplainDump {
       if (args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted
       else args(1).split(",").toSeq
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val cpus = Runtime.getRuntime.availableProcessors.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.runnerSession(sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -36,10 +36,6 @@ import org.apache.spark.sql.execution.LogicalRDD
   *  - normal: built once per (session, key), materialized eagerly (a
   *    pinned checkpoint unless the caller passes its own
   *    materialization) and returned by reference to every later query.
-  *  - [[transparent]]: [[trunkCheckpoint]] is the identity and
-  *    [[trunk]] returns the raw build — the caller sees the full build
-  *    lineage. For plan inspection of SMALL builds only (the planted
-  *    detector spec); never execute an iterative kernel this way.
   *  - [[fresh]]: checkpoints behave normally (bounded plans) but the
   *    session memo is bypassed, so a perturbation harness re-executing
   *    a query rebuilds its trunks under the CURRENT session config
@@ -55,9 +51,6 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Materialize {
 
-  private val transparentDepth = new ThreadLocal[Integer] {
-    override def initialValue: Integer = 0
-  }
   private val freshDepth = new ThreadLocal[Integer] {
     override def initialValue: Integer = 0
   }
@@ -67,16 +60,6 @@ object Materialize {
   // perturbed runs never share a build.
   private val freshScope =
     new ThreadLocal[java.util.HashMap[Any, DataFrame]]
-
-  private def isTransparent: Boolean = transparentDepth.get > 0
-
-  /** Run `body` with every [[trunkCheckpoint]] a no-op and every
-    * [[trunk]] returning its raw build (full lineage). Reentrant,
-    * thread-local. */
-  def transparent[T](body: => T): T = {
-    transparentDepth.set(transparentDepth.get + 1)
-    try body finally transparentDepth.set(transparentDepth.get - 1)
-  }
 
   /** Run `body` with the session trunk memo bypassed but checkpoints
     * intact: trunks rebuild under the caller's current session config.
@@ -126,8 +109,7 @@ object Materialize {
   def trunk(s: SparkSession, key: Any,
       materialize: DataFrame => DataFrame = pinnedCheckpoint)(
       build: => DataFrame): DataFrame =
-    if (isTransparent) build
-    else if (freshDepth.get > 0)
+    if (freshDepth.get > 0)
       scopedMemo((s, key)) { build.trunkCheckpoint() }
     else {
       val k = (s, key)
@@ -195,8 +177,7 @@ object Materialize {
     case _ => None
   }
 
-  /** `df.localCheckpoint()` (+ provenance recording) in normal and
-    * [[fresh]] modes; identity inside [[transparent]].
+  /** `df.localCheckpoint()` + provenance recording.
     *
     * `eager = false` defers materialization to the frame's FIRST
     * action (lineage is truncated immediately either way): an
@@ -209,16 +190,14 @@ object Materialize {
   implicit class TrunkCheckpointOps(private val df: DataFrame)
       extends AnyVal {
     def trunkCheckpoint(): DataFrame = trunkCheckpoint(eager = true)
-    def trunkCheckpoint(eager: Boolean): DataFrame =
-      if (isTransparent) df
-      else {
-        val cp = df.localCheckpoint(eager)
-        cp.queryExecution.analyzed match {
-          case lr: LogicalRDD =>
-            provenance.put(lr.rdd.id, df.queryExecution.analyzed)
-          case _ => // not a plain checkpoint leaf; nothing to record
-        }
-        cp
+    def trunkCheckpoint(eager: Boolean): DataFrame = {
+      val cp = df.localCheckpoint(eager)
+      cp.queryExecution.analyzed match {
+        case lr: LogicalRDD =>
+          provenance.put(lr.rdd.id, df.queryExecution.analyzed)
+        case _ => // not a plain checkpoint leaf; nothing to record
       }
+      cp
+    }
   }
 }

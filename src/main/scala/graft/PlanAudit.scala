@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan-quality sweep: one summary line per registered query from its
   * physical plan — scans, pushed-filter scans, exchanges, broadcasts,
@@ -17,18 +16,10 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // AQE defers codegen wrapping to stage execution; audit the
-      // static plan so WholeStageCodegen spans are visible
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE defers codegen wrapping to stage execution; audit the static
+    // plan so WholeStageCodegen spans are visible
+    val spark = SessionTuning.runnerSession(sfDir,
+      "spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
 
     def count(hay: String, needle: String): Int =

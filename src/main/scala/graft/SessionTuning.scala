@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Scale-adaptive session defaults shared by the runner mains.
   *
   * `spark.sql.shuffle.partitions` was a constant (= core count) tuned
@@ -47,5 +49,27 @@ object SessionTuning {
       catch { case _: Throwable => 0L }
     math.max(cpus,
       math.min(MaxPartitions.toLong, bytes / BytesPerPartition).toInt)
+  }
+
+  /** The one session set-up of the runner mains (Verify, PlanAudit,
+    * ExplainDump): `local[$SPARK_GRAFT_CPUS]` (default: all cores),
+    * [[shufflePartitions]] for `sfDir`, UTC, [[GraftExtensions]], UI
+    * off, WARN logging. `extraConf` is applied last, so a main can
+    * override any of these (PlanAudit turns AQE off). */
+  private[graft] def runnerSession(sfDir: String,
+      extraConf: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions",
+        shufflePartitions(sfDir, cpus.toInt).toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) =>
+      b.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -28,29 +28,15 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_doc_id"),
         count(lit(1)).as("n_copies"))
 
-  /** MinHash signature columns h0..h{k-1}: per doc, min over shingles of
-    * lane_i(shingle). One md5 per shingle then k affine lanes (see
-    * Hashing.lane) — one explode + one groupBy with k min-aggregates;
-    * partial aggregation keeps the shuffle tiny (k longs per doc). */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, shingleSize: Int): DataFrame = {
-    val exploded = df
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
-      .select(col("doc_id"),
-        explode(shinglesFromTokens(col("toks"), shingleSize)).as("sh"))
-      .select(col("doc_id"),
-        hash60(col("sh")).bitwiseAND(lit(Mask31)).as("h31"))
-    val aggs = (0 until numHashes)
-      .map(i => min(lane(col("h31"), i)).as(s"h$i"))
-    exploded.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Signatures from an already-materialized shingle-set column —
-    * hash-identical to `minhashSignatures`, for callers that also need
-    * the sets themselves (Jaccard verify): one tokenize+shingle pass
-    * feeds both instead of re-deriving per consumer (q99: the naive
-    * composition shingles each corpus side twice). Only pass a
-    * MATERIALIZED (checkpointed) column: exploding a live projected
+  /** MinHash signature columns h0..h{k-1} from an already-materialized
+    * shingle-set column: per doc, min over shingles of lane_i(shingle).
+    * One md5 per shingle then k affine lanes (see Hashing.lane) — one
+    * explode + one groupBy with k min-aggregates; partial aggregation
+    * keeps the shuffle tiny (k longs per doc). Taking the sets, not the
+    * text, lets callers that also need them (Jaccard verify) share one
+    * tokenize+shingle pass instead of re-deriving per consumer (q99:
+    * the naive composition shingles each corpus side twice). Only pass
+    * a MATERIALIZED (checkpointed) column: exploding a live projected
     * array expression re-inlines it below the repartition
     * (InferFiltersFromGenerate — see the q58 note in BASELINE.md). */
   def minhashFromShingleSets(df: DataFrame, idCol: String,

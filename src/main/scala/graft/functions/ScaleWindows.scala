@@ -33,14 +33,21 @@ import org.apache.spark.sql.functions._
   * The explicit partition count keeps AQE from re-coalescing the
   * exchange between its two consumers.
   *
-  * Branch consistency: every operator here feeds the ranged frame to
-  * TWO plan branches (per-partition aggregates + the final join), and
-  * the sampled exchange is not reliably reused across them (column
-  * pruning specializes the subtrees; re-sampling can pick different
-  * boundaries when upstream row order is nondeterministic). All four
-  * operators therefore materialize the exchange once by default
-  * (`checkpoint = true`, an eager localCheckpoint) so both branches
-  * see one boundary set.
+  * Every operator is the same skeleton — [[ranged]] (exchange + `__pid`
+  * tag + checkpoint), a per-partition aggregate, the [[carry]] over the
+  * P-row frame, then a partition-local window joined back to the carry
+  * — differing only in the aggregate, the carry fold and the window.
+  *
+  * Branch consistency: the ranged frame feeds TWO plan branches
+  * (per-partition aggregates + the final join), and the sampled
+  * exchange is not reliably reused across them: column pruning
+  * specializes the subtrees, and a SAMPLED range exchange re-evaluated
+  * independently can land on DIFFERENT boundaries (sampling order
+  * depends on upstream shuffle-read order), making the carry describe
+  * the wrong partitioning. That divergence is intermittent (surfaced by
+  * q312 after hundreds of green runs of the same machinery), so
+  * [[ranged]] materializes the exchange ONCE via an eager
+  * checkpoint — both branches share one boundary set by construction.
   */
 object ScaleWindows {
 
@@ -53,29 +60,52 @@ object ScaleWindows {
     if (parts > 0) parts
     else df.sparkSession.sparkContext.defaultParallelism
 
+  /** The range-partitioned input every operator starts from: `keys`'
+    * sampled range exchange, each row tagged with its partition id
+    * `__pid`, checkpointed so both plan branches read one boundary set
+    * (see the object doc). */
+  private def ranged(df: DataFrame, keys: Seq[Column],
+                     parts: Int): DataFrame =
+    df.repartitionByRange(resolveParts(df, parts), keys: _*)
+      .withColumn("__pid", spark_partition_id())
+      .trunkCheckpoint()
+
+  // broadcast-copy name of a per-partition column: `__cnt` → `__cnt2`,
+  // `__psum_o` → `__psum2_o`
+  private def primed(c: String): String = c.indexOf('_', 2) match {
+    case -1 => c + "2"
+    case i => c.substring(0, i) + "2" + c.substring(i)
+  }
+
+  /** The carry over the P-row frame `perPid` (one row per `__pid`): a
+    * broadcast triangular join against a [[primed]] copy of itself,
+    * aggregated per `__pid` by `fold`, which receives the "strictly
+    * preceding partition" predicate — O(P²) on ≤ a few thousand rows,
+    * NO global window anywhere in the plan. */
+  private def carry(perPid: DataFrame)(
+      fold: Column => Seq[Column]): DataFrame = {
+    val rhs = perPid.select(perPid.columns.map(c => col(c).as(primed(c))): _*)
+    val aggs = fold(col("__pid2") < col("__pid"))
+    perPid.crossJoin(broadcast(rhs))
+      .groupBy(col("__pid")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  private def inPartition(keys: Seq[Column]) =
+    Window.partitionBy(col("__pid")).orderBy(keys: _*)
+
   /** Exact `ntile(k)` over the global order `keys` without a
     * single-partition sort. `keys` must be a total order (unique
     * tie-break). Adds column `out` (int, 1..k). */
   def rangeNtile(df: DataFrame, k: Int, keys: Seq[Column], out: String,
-                 parts: Int = -1,
-                 checkpoint: Boolean = true): DataFrame = {
+                 parts: Int = -1): DataFrame = {
     require(k > 0, s"rangeNtile: k must be positive, got $k")
-    val ranged0 = df.repartitionByRange(resolveParts(df, parts), keys: _*)
-      .withColumn("__pid", spark_partition_id())
-    val ranged = if (checkpoint) ranged0.trunkCheckpoint() else ranged0
-    val counts = ranged.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("__cnt"))
-    // offsets without a window: triangular sum over the P-row frame
-    val rhs = counts.select(col("__pid").as("__pid2"),
-      col("__cnt").as("__cnt2"))
-    val offs = counts.crossJoin(broadcast(rhs))
-      .groupBy(col("__pid"))
-      .agg(sum(when(col("__pid2") < col("__pid"), col("__cnt2"))
-          .otherwise(lit(0L))).as("__off"),
+    val r = ranged(df, keys, parts)
+    val counts = r.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
+    val offs = carry(counts) { precedes =>
+      Seq(sum(when(precedes, col("__cnt2")).otherwise(lit(0L))).as("__off"),
         sum(col("__cnt2")).as("__total"))
-    val wp = Window.partitionBy(col("__pid")).orderBy(keys: _*)
-    ranged
-      .withColumn("__rn", row_number().over(wp))
+    }
+    r.withColumn("__rn", row_number().over(inPartition(keys)))
       .join(broadcast(offs), Seq("__pid"))
       .withColumn("__i", col("__off") + col("__rn") - 1)
       .withColumn("__q", expr(s"__total div ${k}L"))
@@ -91,53 +121,32 @@ object ScaleWindows {
 
   /** Exact EXCLUSIVE prefix sum of `value` over the global order
     * `keys` (sum of strictly-preceding rows; 0 for the first) without
-    * a single-partition sort: range exchange → per-partition totals →
-    * broadcast triangular offsets over the P-row frame → partition-
-    * local running sum + carried offset. Same determinism contract as
-    * [[rangeNtile]]: `keys` must be a total order. Adds `out` (long). */
+    * a single-partition sort: per-partition totals → carried offsets
+    * → partition-local running sum + offset. Same determinism contract
+    * as [[rangeNtile]]: `keys` must be a total order. Adds `out`
+    * (long). */
   def rangeCumSum(df: DataFrame, keys: Seq[Column], value: Column,
-                  out: String, parts: Int = -1,
-                  checkpoint: Boolean = true): DataFrame =
-    rangeCumSums(df, keys, Seq(value -> out), parts, checkpoint)
+                  out: String, parts: Int = -1): DataFrame =
+    rangeCumSums(df, keys, Seq(value -> out), parts)
 
   /** Multi-value form of [[rangeCumSum]]: N exclusive prefix sums over
     * ONE range exchange and one partition-local WindowExec (all sums
     * share the frame). `values` maps each summed column to its output
-    * column name.
-    *
-    * `checkpoint` (default ON): the ranged frame feeds BOTH the
-    * per-partition-totals branch and the window branch. Column pruning
-    * specializes the two subtrees differently, so Spark does not
-    * always reuse the exchange — and a SAMPLED range exchange
-    * re-evaluated independently can land on DIFFERENT boundaries
-    * (sampling order depends on upstream shuffle-read order), making
-    * the offsets describe the wrong partitioning. That divergence is
-    * intermittent (surfaced by q312 after hundreds of green runs of
-    * the same machinery), so the default materializes the exchange
-    * ONCE via an eager localCheckpoint — both branches then share one
-    * boundary set by construction. Opt out only when the caller
-    * guarantees a deterministic, reusable input (and accepts the
-    * risk). */
+    * column name. */
   def rangeCumSums(df: DataFrame, keys: Seq[Column],
                    values: Seq[(Column, String)],
-                   parts: Int = -1,
-                   checkpoint: Boolean = true): DataFrame = {
-    val ranged0 = df.repartitionByRange(resolveParts(df, parts), keys: _*)
-      .withColumn("__pid", spark_partition_id())
-    val ranged = if (checkpoint) ranged0.trunkCheckpoint() else ranged0
+                   parts: Int = -1): DataFrame = {
+    val r = ranged(df, keys, parts)
     val psums = values.map { case (v, o) => sum(v).as(s"__psum_$o") }
-    val sums = ranged.groupBy(col("__pid")).agg(psums.head, psums.tail: _*)
-    val rhs = sums.select(col("__pid").as("__pid2") +:
-      values.map { case (_, o) => col(s"__psum_$o").as(s"__psum2_$o") }: _*)
-    val offAggs = values.map { case (_, o) =>
-      sum(when(col("__pid2") < col("__pid"), col(s"__psum2_$o"))
-        .otherwise(lit(0L))).as(s"__off_$o")
+    val sums = r.groupBy(col("__pid")).agg(psums.head, psums.tail: _*)
+    val offs = carry(sums) { precedes =>
+      values.map { case (_, o) =>
+        sum(when(precedes, col(s"__psum2_$o")).otherwise(lit(0L)))
+          .as(s"__off_$o")
+      }
     }
-    val offs = sums.crossJoin(broadcast(rhs))
-      .groupBy(col("__pid")).agg(offAggs.head, offAggs.tail: _*)
-    val wp = Window.partitionBy(col("__pid")).orderBy(keys: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val joined = ranged.join(broadcast(offs), Seq("__pid"))
+    val wp = inPartition(keys).rowsBetween(Window.unboundedPreceding, -1)
+    val joined = r.join(broadcast(offs), Seq("__pid"))
     val withOut = values.foldLeft(joined) { case (d, (v, o)) =>
       d.withColumn(o, coalesce(sum(v).over(wp), lit(0L)) + col(s"__off_$o"))
     }
@@ -147,37 +156,21 @@ object ScaleWindows {
   /** Exact EXCLUSIVE prefix max of `value` over the global order
     * `keys` (max of strictly-preceding rows; NULL for the first row)
     * without a single-partition sort — the skyline/running-record
-    * primitive. Same machinery and determinism contract as
-    * [[rangeCumSum]]: range exchange → per-partition maxima →
-    * broadcast triangular exclusive-max carry over the P-row frame →
+    * primitive. Same skeleton and determinism contract as
+    * [[rangeCumSum]]: per-partition maxima → exclusive-max carry →
     * partition-local exclusive running max `greatest`-merged with the
     * carry (Spark's `greatest` skips NULLs, so a first-partition row
     * with no carry still sees its local predecessors and the global
     * first row stays NULL). Adds `out`, typed as `value`. */
   def rangeCumMax(df: DataFrame, keys: Seq[Column], value: Column,
-                  out: String, parts: Int = -1,
-                  checkpoint: Boolean = true): DataFrame = {
-    val ranged0 = df.withColumn("__v", value)
-      .repartitionByRange(resolveParts(df, parts), keys: _*)
-      .withColumn("__pid", spark_partition_id())
-    // same hazard as rangeCumSums: the maxima branch and the final
-    // join branch re-evaluate the input under independently-sampled
-    // range boundaries; for a long or itself-range-exchanged lineage
-    // the samples can disagree and the carry then describes a
-    // DIFFERENT partitioning. `checkpoint = true` materializes the
-    // exchange once so both branches share one boundary set.
-    val ranged = if (checkpoint) ranged0.trunkCheckpoint() else ranged0
-    val maxes = ranged.groupBy(col("__pid"))
-      .agg(max(col("__v")).as("__pmax"))
-    val rhs = maxes.select(col("__pid").as("__pid2"),
-      col("__pmax").as("__pmax2"))
-    val offs = maxes.crossJoin(broadcast(rhs))
-      .groupBy(col("__pid"))
-      .agg(max(when(col("__pid2") < col("__pid"), col("__pmax2")))
-        .as("__carry"))
-    val wp = Window.partitionBy(col("__pid")).orderBy(keys: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    ranged.join(broadcast(offs), Seq("__pid"))
+                  out: String, parts: Int = -1): DataFrame = {
+    val r = ranged(df.withColumn("__v", value), keys, parts)
+    val maxes = r.groupBy(col("__pid")).agg(max(col("__v")).as("__pmax"))
+    val offs = carry(maxes) { precedes =>
+      Seq(max(when(precedes, col("__pmax2"))).as("__carry"))
+    }
+    val wp = inPartition(keys).rowsBetween(Window.unboundedPreceding, -1)
+    r.join(broadcast(offs), Seq("__pid"))
       .withColumn(out, greatest(max(col("__v")).over(wp), col("__carry")))
       .drop("__pid", "__v", "__carry")
   }
@@ -186,38 +179,28 @@ object ScaleWindows {
     * order: for each row, the most recent non-null `value` at or
     * before it in `keys` order — the step-function/as-of primitive
     * (gap fill, inverse-CDF lookup, snapshot carry) without a
-    * single-partition sort. Same machinery as [[rangeCumSum]]: range
-    * exchange → per-partition LAST non-null (a struct-max over the
-    * key tuple, so `keys` must be plain ASCENDING columns — negate a
-    * column to descend) → nearest-preceding-partition carry via the
-    * broadcast triangular join → partition-local
+    * single-partition sort. Same skeleton as [[rangeCumSum]]:
+    * per-partition LAST non-null (a struct-max over the key tuple, so
+    * `keys` must be plain ASCENDING columns — negate a column to
+    * descend) → nearest-preceding-partition carry → partition-local
     * `last(ignoreNulls)` window + carry fallback. Adds `out`, typed
     * as `value`. */
   def rangeLastCarry(df: DataFrame, keys: Seq[Column], value: Column,
-                     out: String, parts: Int = -1,
-                     checkpoint: Boolean = true): DataFrame = {
-    val tagged0 = df.withColumn("__v", value)
-      .repartitionByRange(resolveParts(df, parts), keys: _*)
-      .withColumn("__pid", spark_partition_id())
-    val tagged = if (checkpoint) tagged0.trunkCheckpoint() else tagged0
+                     out: String, parts: Int = -1): DataFrame = {
+    val r = ranged(df.withColumn("__v", value), keys, parts)
     val keyStruct = struct(
       keys.zipWithIndex.map { case (k, i) => k.as(s"__k$i") } :+
         col("__v").as("__vv"): _*)
-    val lasts = tagged.groupBy(col("__pid"))
+    val lasts = r.groupBy(col("__pid"))
       .agg(max(when(col("__v").isNotNull, keyStruct)).as("__last"))
       .select(col("__pid"), col("__last").getField("__vv").as("__lastv"))
-    val rhs = lasts.select(col("__pid").as("__pid2"),
-      col("__lastv").as("__lastv2"))
-    val offs = lasts.crossJoin(broadcast(rhs))
-      .groupBy(col("__pid"))
-      .agg(max(when(col("__pid2") < col("__pid") &&
-          col("__lastv2").isNotNull,
+    val offs = carry(lasts) { precedes =>
+      Seq(max(when(precedes && col("__lastv2").isNotNull,
         struct(col("__pid2").as("__p"), col("__lastv2").as("__cv"))))
         .as("__carry"))
-      .select(col("__pid"), col("__carry").getField("__cv").as("__carryv"))
-    val wp = Window.partitionBy(col("__pid")).orderBy(keys: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    tagged.join(broadcast(offs), Seq("__pid"))
+    }.select(col("__pid"), col("__carry").getField("__cv").as("__carryv"))
+    val wp = inPartition(keys).rowsBetween(Window.unboundedPreceding, 0)
+    r.join(broadcast(offs), Seq("__pid"))
       .withColumn(out,
         coalesce(last(col("__v"), ignoreNulls = true).over(wp),
           col("__carryv")))

@@ -31,6 +31,17 @@ object Similarity {
     aggregate(transform(a, x => x.cast("double") * x.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
+  /** DuckDB fragments of [[dot]], [[norm2]] and [[cosineFold]] over
+    * two list expressions, for oracle SQL: double multiply-adds in
+    * index order, so both engines produce bit-identical doubles. */
+  def sqlDotCols(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), " +
+      "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
+  def sqlNorm(c: String): String =
+    s"list_sum(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+  def sqlCosCols(a: String, b: String): String =
+    s"${sqlDotCols(a, b)} / (sqrt(${sqlNorm(a)}) * sqrt(${sqlNorm(b)}))"
+
   /** Composed-builtin cosine — kept as the executable spec the native
     * expression is tested against. */
   def cosineFold(a: Column, b: Column): Column =

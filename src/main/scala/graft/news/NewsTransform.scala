@@ -45,21 +45,6 @@ object NewsTransform {
       col("language").as("LANGUAGE"),
       col("ingest_ts").cast("timestamp").as("INGEST_TS"))
 
-  /** stg_sentiment — 'N/A'→NULL recode + typed scores + load audit col
-    * (ref stg_sentiment.sql:2-15). */
-  def stgSentiment(raw: DataFrame, loadTs: String): DataFrame = {
-    def recode(c: String) =
-      when(col(c) === "N/A", lit(null)).otherwise(col(c))
-        .cast("double").as(c.toUpperCase)
-    raw.select(
-      col("id").as("ID"),
-      col("article_id").as("ARTICLE_ID"),
-      recode("sentiment_mark"),
-      recode("sentiment_poilievre"),
-      col("model").as("MODEL"),
-      lit(loadTs).cast("timestamp").as("LOAD_TS_UTC"))
-  }
-
   /** The workhorse `transformed` view (ref transformed.sql:1-247).
     * Grain: one row per raw ID. Stages, in order:
     *  1. F1 author blacklist (PG `!=` semantics: NULL authors drop too,

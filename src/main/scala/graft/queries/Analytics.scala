@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Similarity.sqlCosCols
 
 /** Round-4 continuation batch: the remaining classic warehouse
   * decorrelation shapes (TPC-H Q2 / Q11 / Q15 / Q20 / Q4 analogues on
@@ -230,10 +231,7 @@ object Analytics {
     val tot = grid.agg(sum($"n1").as("t1"), sum($"n2").as("t2"))
     val cum = ScaleWindows.rangeCumSums(grid, Seq($"v"),
       Seq(col("n1") -> "e1", col("n2") -> "e2"))
-    // checkpoint: cum's lineage embeds its own range exchange, and
-    // rangeCumMax's two branches must see ONE boundary sample
-    val lagged = ScaleWindows.rangeCumMax(cum, Seq($"v"), $"v", "prev_v",
-      checkpoint = true)
+    val lagged = ScaleWindows.rangeCumMax(cum, Seq($"v"), $"v", "prev_v")
     lagged.filter($"prev_v".isNotNull)
       .crossJoin(broadcast(tot))
       .select((abs($"e1" * $"t2" - $"e2" * $"t1") *
@@ -247,19 +245,6 @@ object Analytics {
           " (1000000 * (num % (t1 * t2))) div (t1 * t2) AS BIGINT)")
           .as("w1_micro_cents"))
   }
-
-  // ------------------------------------------------ retrieval helpers
-
-  // DuckDB cosine fragments, kept in lockstep with Similarity.cosine
-  // (the q252/q216 parity convention: double multiply-adds in index
-  // order so both engines produce bit-identical doubles).
-  private def sqlDotCols(a: String, b: String) =
-    s"list_sum(list_transform(list_zip($a, $b), " +
-      "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-  private def sqlNorm(c: String) =
-    s"list_sum(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-  private def sqlCosCols(a: String, b: String) =
-    s"${sqlDotCols(a, b)} / (sqrt(${sqlNorm(a)}) * sqrt(${sqlNorm(b)}))"
 
   // --------------------------------------------------- q308 MRR eval
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Dedup, Hashing, ScaleWindows, TextOps}
+import Curation.tokenized
 import Hashing.sqlHash60
 import TextOps.sqlTokens
 
@@ -22,12 +23,6 @@ import TextOps.sqlTokens
   * a result (the q77/q121 pattern).
   */
 object Corpus {
-
-  private def tokenized(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables(s, dir, "documents")
-      .select($"doc_id", TextOps.tokens($"text").as("toks"))
-  }
 
   // ---------------------------------------------------- q227 LM scoring
 

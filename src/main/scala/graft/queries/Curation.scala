@@ -23,7 +23,8 @@ object Curation {
 
   private val ShingleN = 3
 
-  private def tokenized(s: SparkSession, dir: String): DataFrame = {
+  /** (doc_id, toks): every document's word tokens (TextOps.tokens). */
+  private[queries] def tokenized(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables(s, dir, "documents")
       .select($"doc_id", TextOps.tokens($"text").as("toks"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Dedup, Hashing, Similarity, TextOps}
 import Hashing.sqlHash60
+import Similarity.{sqlCosCols, sqlNorm}
 import TextOps.sqlTokens
 
 /** Round-4 second batch: the data-selection and measurement operators
@@ -28,17 +29,6 @@ import TextOps.sqlTokens
   * expressions are value-identical without any floor shimming.
   */
 object Insights {
-
-  // DuckDB cosine fragments (kept in lockstep with Similarity.cosine:
-  // double multiply-adds in index order, so both engines produce
-  // bit-identical doubles).
-  private def sqlDotCols(a: String, b: String) =
-    s"list_sum(list_transform(list_zip($a, $b), " +
-      "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-  private def sqlNorm(c: String) =
-    s"list_sum(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-  private def sqlCosCols(a: String, b: String) =
-    s"${sqlDotCols(a, b)} / (sqrt(${sqlNorm(a)}) * sqrt(${sqlNorm(b)}))"
 
   // ------------------------------------------------- q242 DSIR weights
 

@@ -48,7 +48,7 @@ object Modeling {
       itemCfTopkBuild(s, dir)
     }
 
-  private def itemCfTopkBuild(s: SparkSession, dir: String) = {
+  private[graft] def itemCfTopkBuild(s: SparkSession, dir: String) = {
     import s.implicits._
     val baskets = Tables(s, dir, "lineitem")
       .select($"l_orderkey", $"l_partkey").distinct()

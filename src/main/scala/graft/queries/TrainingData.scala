@@ -8,6 +8,7 @@ import graft.Tables
 import graft.functions.{ConnectedComponents, Dedup, Hashing, Multimodal,
   MediaRecord, ScaleWindows, Similarity, StubImageDecoder, TextOps}
 import Hashing.{sqlHash60}
+import Similarity.sqlCosCols
 import TextOps.{sqlShingles, sqlTokens}
 
 /** Training-data-pipeline operators: dedup family, similarity search,
@@ -3249,13 +3250,6 @@ object TrainingData {
        |WHERE o.doc_id < $TwinOffset""".stripMargin
   }
 
-  private def sqlDotCols(a: String, b: String) =
-    s"list_sum(list_transform(list_zip($a, $b), " +
-      "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-  private def sqlNorm(c: String) =
-    s"list_sum(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-  private def sqlCosCols(a: String, b: String) =
-    s"${sqlDotCols(a, b)} / (sqrt(${sqlNorm(a)}) * sqrt(${sqlNorm(b)}))"
   private val sqlCos = sqlCosCols("embedding", "qv")
 
   private def sqlBucket: String = {
@@ -3654,7 +3648,7 @@ object TrainingData {
     * each remaining candidate's max similarity into sel(i−1) and
     * picks the integral-MMR argmax. Kept in lockstep with
     * [[mmrRerank]] (same pool bound, λ split, tie order). */
-  // lazy: refers to sqlCos/sqlCosCols declared later in this object
+  // lazy: refers to sqlCos declared later in this object
   private lazy val sqlMmrRerank: String = {
     val stages = (2 to MmrK).map { i =>
       s"""cand$i AS MATERIALIZED (SELECT c.vec_id, c.label, c.rel_micro,

@@ -92,39 +92,18 @@ object NewsStream {
     * sentiment watermark and sentiment state behind its own watermark
     * are dropped, keeping state O(window · arrival rate) regardless of
     * stream length. Without the range condition this would be an
-    * unbounded-state join Spark rightly refuses in append mode. */
-  def joinSentimentStream(articles: DataFrame,
-      sentiment: DataFrame): DataFrame = {
-    val a = articles
-      .withColumn("article_id",
-        md5(concat_ws("-", col("title"), col("source_name"), col("url"))))
-      .withWatermark("publishedat", "1 day")
-    val sRaw = sentiment
-      .withColumnRenamed("ingest_ts", "scored_ts")
-      .withColumn("sentiment_mark",
-        when(col("sentiment_mark") === "N/A", lit(null))
-          .otherwise(col("sentiment_mark")).cast("double"))
-      .withWatermark("scored_ts", "1 day")
-    a.join(sRaw,
-        a("article_id") === sRaw("article_id") &&
-        col("scored_ts") >= col("publishedat") &&
-        col("scored_ts") <= col("publishedat") + expr("INTERVAL 2 DAYS"))
-      .select(a("article_id"), col("title"), col("source_name"),
-        col("publishedat"), col("scored_ts"), col("sentiment_mark"),
-        col("model"))
-  }
-
-  /** LEFT OUTER form of [[joinSentimentStream]]: every article
-    * eventually emits — scored articles as soon as their sentiment
-    * arrives, unscored ones as a null-padded row once BOTH watermarks
-    * pass the article's 2-day scoring window (the state store can then
-    * prove no future sentiment can match, the only sound time to emit
-    * the outer row). This is the "which articles never got scored"
-    * audit as a continuous query; the inner form drops them silently.
-    * Same bounded-state contract: the range condition plus the two
-    * watermarks keep join state O(window · arrival rate). */
-  def joinSentimentStreamOuter(articles: DataFrame,
-      sentiment: DataFrame): DataFrame = {
+    * unbounded-state join Spark rightly refuses in append mode.
+    *
+    * `joinType` is `"inner"` or `"left_outer"`. The outer form makes
+    * every article eventually emit — scored articles as soon as their
+    * sentiment arrives, unscored ones as a null-padded row once BOTH
+    * watermarks pass the article's 2-day scoring window (the state
+    * store can then prove no future sentiment can match, the only
+    * sound time to emit the outer row). That is the "which articles
+    * never got scored" audit as a continuous query; the inner form
+    * drops them silently. */
+  def joinSentimentStream(articles: DataFrame, sentiment: DataFrame,
+      joinType: String): DataFrame = {
     val a = articles
       .withColumn("article_id",
         md5(concat_ws("-", col("title"), col("source_name"), col("url"))))
@@ -139,7 +118,7 @@ object NewsStream {
         a("article_id") === sRaw("article_id") &&
         col("scored_ts") >= col("publishedat") &&
         col("scored_ts") <= col("publishedat") + expr("INTERVAL 2 DAYS"),
-        "left_outer")
+        joinType)
       .select(a("article_id"), col("title"), col("source_name"),
         col("publishedat"), col("scored_ts"), col("sentiment_mark"),
         col("model"))

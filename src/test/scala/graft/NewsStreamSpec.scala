@@ -176,7 +176,7 @@ class NewsStreamSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(sDir)
     val joined = NewsStream.joinSentimentStream(
       spark.readStream.schema(Schemas.rawNews).parquet(aDir),
-      spark.readStream.schema(Schemas.sentimentRaw).parquet(sDir))
+      spark.readStream.schema(Schemas.sentimentRaw).parquet(sDir), "inner")
     val q = joined.writeStream.format("memory").queryName("ssj")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -212,9 +212,10 @@ class NewsStreamSpec extends SparkSpec {
     // which only fault-tolerant sinks support
     val outDir = s"$base/out"
     def runOnce(): Array[Row] = {
-      val q = NewsStream.joinSentimentStreamOuter(
+      val q = NewsStream.joinSentimentStream(
           spark.readStream.schema(Schemas.rawNews).parquet(aDir),
-          spark.readStream.schema(Schemas.sentimentRaw).parquet(sDir))
+          spark.readStream.schema(Schemas.sentimentRaw).parquet(sDir),
+          "left_outer")
         .writeStream.format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", ckpt)

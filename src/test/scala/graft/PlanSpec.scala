@@ -411,9 +411,10 @@ class PlanSpec extends SparkSpec {
     // q346: the top-3 rank prunes inside each item partition BEFORE
     // any exchange — the property that keeps the serving table join
     // O(k·items). The serving table is a memoized session trunk since
-    // r10 (shared with q398), so the assertion must look at the BUILD
-    // lineage (transparent mode), not the trunk-hit ExistingRDD scan.
-    assert(Materialize.transparent { plan("q346_item_cf_topk") }
+    // r10 (shared with q398), so the assertion looks at the BUILD's
+    // plan, not the trunk-hit ExistingRDD scan.
+    assert(graft.queries.Modeling.itemCfTopkBuild(spark, sfDir)
+      .queryExecution.explainString(FormattedMode)
       .contains("WindowGroupLimit"))
     // q352: three OLS fits from one moment pass — no window, no
     // shuffled row-level join anywhere in the plan

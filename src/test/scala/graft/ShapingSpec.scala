@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.queries.Shaping
 
@@ -7,6 +10,19 @@ import graft.queries.Shaping
   * restatement. Runs at sf0.001. */
 class ShapingSpec extends SparkSpec {
   import spark.implicits._
+
+  // the branch-consistency checkpoint: the sampled range exchange ran
+  // once, so no RepartitionByExpression is left in the optimized plan
+  // and the __pid-tagged ranged input is a checkpoint (LogicalRDD) leaf
+  private def assertRangedOnce(df: DataFrame): Unit = {
+    val p = df.queryExecution.optimizedPlan
+    assert(p.collectFirst { case r: RepartitionByExpression => r }.isEmpty,
+      "the range exchange is re-planned after the checkpoint")
+    assert(p.collectLeaves().exists {
+      case lr: LogicalRDD => lr.output.exists(_.name == "__pid")
+      case _ => false
+    }, "the ranged input is not a checkpoint leaf")
+  }
 
   test("funnel stages are monotone in time and consistent with nulls") {
     val f = Shaping.funnel(spark, sfDir).cache()
@@ -42,11 +58,12 @@ class ShapingSpec extends SparkSpec {
     }
     // plan hygiene: the scale form must not contain a global-order
     // window (the single-partition sort the naive ntile plan ships)
-    val plan = graft.functions.ScaleWindows
+    val ranked = graft.functions.ScaleWindows
       .rangeNtile(df, 10, Seq(col("v").asc, col("id").asc), "b")
-      .queryExecution.executedPlan.toString
+    val plan = ranked.queryExecution.executedPlan.toString
     assert(!plan.contains("Window [ntile"),
       "rangeNtile plan must not fall back to a global ntile window")
+    assertRangedOnce(ranked)
     df.unpersist()
   }
 
@@ -73,6 +90,7 @@ class ShapingSpec extends SparkSpec {
     val plan = got.queryExecution.executedPlan.toString
     assert(plan.contains("__pid"),
       "cumsum window must be partitioned by the range-partition id")
+    assertRangedOnce(got)
     df.unpersist()
   }
 
@@ -94,6 +112,7 @@ class ShapingSpec extends SparkSpec {
     val plan = got.queryExecution.executedPlan.toString
     assert(plan.contains("__pid"),
       "cummax window must be partitioned by the range-partition id")
+    assertRangedOnce(got)
     df.unpersist()
   }
 
@@ -111,6 +130,7 @@ class ShapingSpec extends SparkSpec {
       .select(col("id"), col("lv"))
     assert(got.except(expected).count() === 0 &&
       expected.except(got).count() === 0)
+    assertRangedOnce(got)
   }
 
   test("distributed GCM isotonic fit equals the sequential PAV loop") {
