@@ -47,7 +47,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * relational round to a fixpoint (connected components, LPA, k-core,
   * k-truss) hands its round to [[fixpoint]], the one place that decides
   * per-round checkpointing, the convergence probe, the drop of
-  * superseded generations and the iteration cap.
+  * superseded generations and the iteration cap, whose exit is an
+  * error unless the kernel asks for a capped result.
   */
 object Materialize {
 
@@ -122,9 +123,14 @@ object Materialize {
       }
     }
 
-  /** Iterate `step` from `init` until a round leaves the frame unchanged
-    * or `maxIter` steps have run. Returns (final frame, number of steps
-    * that changed the frame, converged?).
+  /** Iterate `step` from `init` until a round leaves the frame
+    * unchanged. Returns (final frame, number of steps that changed the
+    * frame). If `maxIter` steps run without reaching the fixpoint, the
+    * driver drops the generations it created and throws
+    * `IllegalStateException` naming the cap: a capped frame is never
+    * handed on as an answer. A kernel whose cap is part of its
+    * contract (LPA, which can oscillate) passes `acceptCap = true` and
+    * gets the last generation instead.
     *
     * Every frame `step` returns is [[trunkCheckpoint]]ed, so plans
     * never grow with the round count. The checkpoint is lazy: its
@@ -140,8 +146,8 @@ object Materialize {
     * generation the driver created is dropped as soon as its successor
     * is signed, so R rounds hold one copy, not R. `init` belongs to the
     * caller and is never dropped. */
-  def fixpoint(init: DataFrame, maxIter: Int)(
-      step: DataFrame => DataFrame): (DataFrame, Int, Boolean) = {
+  def fixpoint(init: DataFrame, maxIter: Int, acceptCap: Boolean = false)(
+      step: DataFrame => DataFrame): (DataFrame, Int) = {
     def signature(d: DataFrame): (Long, Long) = {
       val r = d.agg(count(lit(1)),
         bit_xor(xxhash64(d.columns.toSeq.map(col): _*))).head()
@@ -160,7 +166,12 @@ object Materialize {
       cur = next
       steps += 1
     }
-    (cur, if (converged) steps - 1 else steps, converged)
+    if (!converged && !acceptCap) {
+      if (!(cur eq init)) CheckpointHygiene.drop(cur)
+      throw new IllegalStateException(
+        s"fixpoint did not converge within its cap of $maxIter rounds")
+    }
+    (cur, if (converged) steps - 1 else steps)
   }
 
   /** Pre-truncation analyzed plan of each checkpoint, by RDD id.

@@ -3,52 +3,81 @@ package graft.functions
 import graft.{CheckpointHygiene, Materialize}
 import graft.Materialize.TrunkCheckpointOps
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Connected components by iterative min-label propagation — the
-  * grouping step of near-duplicate removal (LSH emits candidate PAIRS;
-  * keep-one-per-cluster needs the transitive closure of those pairs).
+/** Connected components — the grouping step of near-duplicate removal
+  * (LSH emits candidate PAIRS; keep-one-per-cluster needs the
+  * transitive closure of those pairs).
   *
-  * Each iteration: every node takes the min label among itself and its
-  * neighbours — one join + one groupBy (two shuffles), converging in
-  * O(component diameter) rounds. Near-dup graphs are shallow (clusters
-  * of copies, diameter ≲ 3), so this beats the constant-factor-heavy
-  * alternating small-star/large-star algorithm (Kiveris et al. 2014)
-  * that a billion-node web graph would call for; [[largeSmallStar]] IS
-  * that swap, same (id, component) contract, for deep graphs.
-  * Both loop their round through [[graft.Materialize.fixpoint]], which
-  * owns the per-round checkpoint, the convergence probe and the drop
-  * of superseded generations.
+  * One kernel: alternating large-star / small-star contraction
+  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  * SoCC 2014). Its round count is O(log² n) worst case and does not
+  * grow with component diameter, so a long near-duplicate chain costs
+  * a few more rounds, not one round per hop. The round loops through
+  * [[graft.Materialize.fixpoint]], which owns the per-round
+  * checkpoint, the convergence probe, the drop of superseded
+  * generations and the loud cap exit.
   */
 object ConnectedComponents {
 
+  // measured: a 1M-node path contracts in 20 changed rounds
+  private val MaxRounds = 30
+
+  /** One large-star + small-star round over an edge set (src, dst)
+    * without self-loops. Each half-round is one window `min`
+    * partitioned by node (one shuffle, no join-back).
+    *
+    * large-star: m(u) = min of u's CLOSED neighbourhood; every
+    * neighbour v > u re-attaches as (v, m(u)), so edges only point
+    * downhill. small-star: orient every edge larger → smaller; m(u) =
+    * min smaller neighbour; u and each of those neighbours attach to
+    * m(u). Both preserve connectivity; the fixpoint is a forest of
+    * stars, child → root, rooted at each component's minimum id. */
+  private def starRound(e: DataFrame): DataFrame = {
+    val bi = e.unionByName(
+      e.select(col("dst").as("src"), col("src").as("dst")))
+    val large = bi
+      .select(col("src"), col("dst"), least(col("src"),
+        min(col("dst")).over(Window.partitionBy(col("src")))).as("m"))
+      .filter(col("dst") > col("src"))
+      .select(col("dst").as("u"), col("m").as("v"))
+    large
+      .select(col("u"), col("v"),
+        min(col("v")).over(Window.partitionBy(col("u"))).as("m"))
+      .select(explode(array(
+        struct(col("u").as("src"), col("m").as("dst")),
+        struct(col("v").as("src"), col("m").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .distinct()
+  }
+
   /** @param nodes one column `id`; @param edges columns `src`,`dst`
     * (undirected; one direction suffices). Returns (id, component)
-    * where component = min node id reachable. */
-  def minLabel(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    val both = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().trunkCheckpoint()
-    // iterate ONLY over nodes that touch an edge: in a near-dup graph
-    // the overwhelming majority of nodes are singletons, and dragging
-    // them through every join/groupBy/convergence-probe round multiplies
-    // each iteration's work by nodes/endpoints for labels that cannot
-    // change. Singletons are appended unchanged at the end.
-    val touched = both.select(col("src").as("id")).distinct()
+    * where component = min node id reachable, for every node and every
+    * edge endpoint. Throws if the contraction has not converged within
+    * its round cap. */
+  def minLabel(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    // lazy checkpoint: fixpoint's signature of `init` materializes it,
+    // and round 1 reads it instead of re-running the caller's lineage
+    val e0 = edges.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst")).trunkCheckpoint(eager = false)
+    val (stars, _) =
+      try Materialize.fixpoint(e0, MaxRounds)(starRound)
+      finally CheckpointHygiene.drop(e0)
+    // star edges are child → root; each root labels itself. The
+    // labels are materialized once, so callers that read the result
+    // several times do not re-derive the roots; after that the star
+    // edges are dead. Nodes that touch no edge are appended as their
+    // own components.
+    val labels = stars.select(col("src").as("id"), col("dst").as("component"))
+      .unionByName(stars.select(col("dst").as("id"), col("dst").as("component"))
+        .distinct())
       .trunkCheckpoint()
-    val (labels, _, _) = Materialize.fixpoint(
-        touched.select(col("id"), col("id").as("component")), maxIter) {
-      cur =>
-        val viaNeighbour = cur.join(both, cur("id") === both("src"))
-          .select(col("dst").as("id"), col("component"))
-        cur.unionByName(viaNeighbour)
-          .groupBy("id").agg(min("component").as("component"))
-    }
-    // the result reads only the final labels and `touched`
-    CheckpointHygiene.drop(both)
+    CheckpointHygiene.drop(stars)
     labels.unionByName(
-      nodes.join(touched, Seq("id"), "left_anti")
+      nodes.join(labels.select(col("id")), Seq("id"), "left_anti")
         .select(col("id"), col("id").as("component")))
   }
 
@@ -69,18 +98,16 @@ object ConnectedComponents {
     *                  (edge-less ones label themselves)
     * @param newEdges  (src, dst) between any old/new ids */
   def incremental(oldLabels: DataFrame, newNodes: DataFrame,
-      newEdges: DataFrame, maxIter: Int = 20): DataFrame = {
+      newEdges: DataFrame): DataFrame = {
     // `lab` is deliberately NOT checkpointed: a same-window A/B at
     // sf0.1 measured eagerly materializing the O(all nodes) frame as a
     // net loss for q99 (the upstream chain is minLabel's already-
     // checkpointed labels + a cheap singleton anti-join, so the four
     // reads are cheap; pinning the full node set was not).
     val lab = oldLabels.select(col("id"), col("component"))
-    // trunkCheckpoint: `mapped` feeds minLabel's edge set, deltaNodes,
-    // AND (through delta's trailing singleton union) both relabeled and
-    // fresh — left lazy, the caller's whole newEdges chain (for q99
-    // that is the band join + two Jaccard-verify joins) re-executes
-    // ~3×; the frame is O(new edges), so pinning it is cheap
+    // `mapped` has one reader, minLabel's lazily checkpointed edge set,
+    // so the caller's newEdges chain (for q99 the band join + two
+    // Jaccard-verify joins) runs once without a checkpoint of its own
     val mapped = newEdges.select(col("src"), col("dst"))
       .join(lab.select(col("id").as("src"), col("component").as("lsrc")),
         Seq("src"), "left")
@@ -89,10 +116,10 @@ object ConnectedComponents {
       .select(coalesce(col("lsrc"), col("src")).as("src"),
         coalesce(col("ldst"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .trunkCheckpoint()
-    val deltaNodes = mapped.select(col("src").as("id"))
-      .unionByName(mapped.select(col("dst").as("id"))).distinct()
-    val delta = minLabel(deltaNodes, mapped, maxIter)
+    // every delta node is an endpoint of `mapped`, which minLabel
+    // labels already: no separate node set
+    val delta = minLabel(mapped.select(col("src").as("id")).where(lit(false)),
+      mapped)
     val relabeled = lab
       .join(delta.select(col("id").as("component"),
         col("component").as("newc")), Seq("component"), "left")
@@ -104,73 +131,5 @@ object ConnectedComponents {
         Seq("id"), "left")
       .select(col("id"), coalesce(col("newc"), col("id")).as("component"))
     relabeled.unionByName(fresh)
-  }
-
-  /** Alternating large-star / small-star connected components
-    * (Kiveris et al. 2014, "Connected Components in MapReduce and
-    * Beyond" — the algorithm web-scale graph systems use). Converges in
-    * O(log² n) rounds INDEPENDENT of component diameter, vs
-    * [[minLabel]]'s O(diameter): on a billion-node graph with long
-    * chains (link graphs, citation chains) min-label's per-hop rounds
-    * are the bottleneck; star-contraction halves path lengths every
-    * round. Each half-round is one partial-aggregated groupBy-min plus
-    * one join back on the SAME key — the join reuses the groupBy's hash
-    * partitioning, so a round costs two shuffles of the edge set and
-    * the edge set only ever shrinks toward one star edge per non-root
-    * node.
-    *
-    * large-star: every node's strictly-larger neighbours re-attach to
-    * the min of its closed neighbourhood. small-star: every node's
-    * smaller neighbours (and itself) attach to that min. Both preserve
-    * connectivity and strictly reduce total edge "height"; the fixpoint
-    * is a forest of stars rooted at each component's minimum id.
-    *
-    * Same contract as [[minLabel]] (nodes(id), edges(src,dst) →
-    * (id, component = min reachable id)); equality is spec-asserted on
-    * chains, random graphs and the q55/q87 LSH pair set.
-    */
-  def largeSmallStar(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 30): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct().trunkCheckpoint()
-    val touched = e0.select(col("src").as("id"))
-      .unionByName(e0.select(col("dst").as("id")))
-      .distinct().trunkCheckpoint()
-    val (stars, _, _) = Materialize.fixpoint(e0, maxIter) { e =>
-      // ---- large-star: m(u) = min over u's CLOSED neighbourhood;
-      // each neighbour v > u re-attaches as (v, m). Emitting only the
-      // larger side keeps every edge pointing downhill (no cycles).
-      val bi = e.unionByName(
-        e.select(col("dst").as("src"), col("src").as("dst")))
-      val lsMin = bi.groupBy("src").agg(min(col("dst")).as("mn"))
-        .select(col("src"), least(col("mn"), col("src")).as("m"))
-      val ls = bi.join(lsMin, "src")
-        .filter(col("dst") > col("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .distinct()
-      // ---- small-star: orient (u = larger, v = smaller); m(u) =
-      // min smaller-neighbour; u and every other smaller neighbour
-      // attach to m.
-      val o = ls.select(greatest(col("src"), col("dst")).as("u"),
-        least(col("src"), col("dst")).as("v"))
-      val ssMin = o.groupBy("u").agg(min(col("v")).as("m"))
-      o.join(ssMin, "u")
-        .select(col("u").as("src"), col("m").as("dst"))
-        .unionByName(o.join(ssMin, "u")
-          .filter(col("v") =!= col("m"))
-          .select(col("v").as("src"), col("m").as("dst")))
-        .distinct()
-    }
-    // the result reads only the final edges and `touched`
-    CheckpointHygiene.drop(e0)
-    // fixpoint edges are star edges child→root; roots never appear on
-    // the left (small-star only emits src > dst).
-    val labels = stars.select(col("src").as("id"), col("dst").as("component"))
-    val roots = touched.join(
-        stars.select(col("src").as("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("component"))
-    labels.unionByName(roots).unionByName(
-      nodes.join(touched, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("component")))
   }
 }

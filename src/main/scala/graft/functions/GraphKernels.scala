@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   * defined once here ([[bfsExpand]], [[kcorePeel]], [[lpaRound]]): the
   * unrolled queries call it a fixed number of times, the kernels loop
   * it. k-core and LPA loop through [[graft.Materialize.fixpoint]]
-  * (checkpoint, convergence probe, drop of superseded generations);
-  * BFS carries two frames per round and stops when the frontier is
-  * empty. Spec-asserted equal to the unrolled query forms when capped
-  * to the same round count (ScaleSpec). */
+  * (checkpoint, convergence probe, drop of superseded generations):
+  * k-core runs to its fixpoint, LPA stops at its round budget; BFS
+  * carries two frames per round and stops when the frontier is empty
+  * or at its hop limit. Spec-asserted equal to the unrolled query
+  * forms (ScaleSpec). */
 object GraphKernels {
 
   /** One BFS round: the nodes one hop out of `frontier` that are not
@@ -67,12 +68,12 @@ object GraphKernels {
       .select(col("u"), col("v"))
   }
 
-  /** k-core: peel degree-<k nodes until nothing drops (or maxIter).
+  /** k-core: peel degree-<k nodes until nothing drops (every round
+    * that changes the edge set removes an edge, so the loop ends).
     * `edges` must hold both directions; returns the surviving
     * bidirectional edge set — q109's round, looped. */
-  def kcore(edges: DataFrame, k: Int,
-      maxIter: Int = Int.MaxValue): DataFrame =
-    Materialize.fixpoint(edges.select(col("u"), col("v")), maxIter)(
+  def kcore(edges: DataFrame, k: Int): DataFrame =
+    Materialize.fixpoint(edges.select(col("u"), col("v")), Int.MaxValue)(
       kcorePeel(k))._1
 
   /** One semi-synchronous LPA round: every node adopts the mode of its
@@ -92,11 +93,14 @@ object GraphKernels {
       .select(col("node_id"), col("lbl"))
   }
 
-  /** Semi-synchronous LPA to label fixpoint (or maxRounds). Returns
-    * (node_id, lbl) — q118's round, looped. */
+  /** Semi-synchronous LPA to label fixpoint or `maxRounds`, whichever
+    * comes first: semi-synchronous LPA can oscillate, so the round
+    * budget is part of its contract and a capped result is the answer.
+    * Returns (node_id, lbl) — q118's round, looped. */
   def lpa(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     val l0 = edges.select(col("src").as("node_id")).distinct()
       .withColumn("lbl", col("node_id"))
-    Materialize.fixpoint(l0, maxRounds)(lpaRound(edges))._1
+    Materialize.fixpoint(l0, maxRounds, acceptCap = true)(
+      lpaRound(edges))._1
   }
 }

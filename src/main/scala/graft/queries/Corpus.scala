@@ -687,7 +687,8 @@ object Corpus {
     * run connected components on the SAME rep-level verified pair
     * frame (filtered per threshold) plus the member stars — the
     * expensive chain is shared via [[TrainingData.nearDupGroups]],
-    * and each CC is O(log n) rounds on the collapsed graph. Token
+    * and each CC is a star contraction on the collapsed graph, whose
+    * round count does not grow with cluster diameter. Token
     * counts ride the group frame (one corpus pass). */
   val dedupSavings: Q = (s, dir) => {
     import s.implicits._

@@ -958,12 +958,13 @@ object Modeling {
     * (account balance, total spend); cells with >= 5 points are
     * dense; dense cells CONNECT through 8-neighborhood adjacency and
     * components come from the repo's
-    * [[graft.functions.ConnectedComponents.minLabel]] O(log n)
-    * machinery — never a point-to-point distance join. The neighbor
-    * join is a 9-way keyed equi-join on cell id (cells are
-    * unit-spaced, so neighbor ids are arithmetic); everything after
-    * the first groupBy is O(dense cells). Output: one row per
-    * cluster with cell/point tallies, cluster id = min cell id. */
+    * [[graft.functions.ConnectedComponents.minLabel]] star contraction
+    * (rounds independent of cluster diameter) — never a point-to-point
+    * distance join. The neighbor join is a 9-way keyed equi-join on
+    * cell id (cells are unit-spaced, so neighbor ids are arithmetic);
+    * everything after the first groupBy is O(dense cells). Output: one
+    * row per cluster with cell/point tallies, cluster id = min cell
+    * id. */
   val gridDbscan: Q = (s, dir) => {
     import s.implicits._
     val spend = Tables(s, dir, "orders")

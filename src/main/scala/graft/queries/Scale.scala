@@ -479,13 +479,8 @@ object Scale {
       $"n_sampled")
   }
 
-  /** q55 — near-dup clustering: the MinHash+LSH candidate pairs of q23
-    * (Jaccard ≥ 0.5) closed into connected components by min-label
-    * propagation, sized per cluster — LSH finds PAIRS; keep-one-per-
-    * cluster dedup needs their transitive closure. Oracle: recursive
-    * CTE over the identical pair set. */
-  /** Shared by q55/q87: the near-dup graph in COLLAPSED form — verified
-    * rep-level pairs plus a member→rep star per duplicate group. Same
+  /** q55's near-dup graph in COLLAPSED form — verified rep-level
+    * pairs plus a member→rep star per duplicate group. Same
     * connectivity as the full expanded pair list (copies reach their
     * rep directly, rep pairs carry the cross-group reachability), at
     * O(distinct-texts) edges instead of O(copies²). */
@@ -502,6 +497,12 @@ object Scale {
     repPairs.unionByName(star)
   }
 
+  /** q55 — near-dup clustering: the MinHash+LSH candidate pairs of q23
+    * (Jaccard ≥ 0.5) closed into connected components by
+    * [[ConnectedComponents.minLabel]]'s star contraction (rounds
+    * independent of chain length), sized per cluster — LSH finds
+    * PAIRS; keep-one-per-cluster dedup needs their transitive closure.
+    * Oracle: recursive CTE over the identical pair set. */
   val dupClusters: Q = (s, dir) => {
     import s.implicits._
     val d = Tables(s, dir, "documents").select($"doc_id")
@@ -549,25 +550,9 @@ object Scale {
         $"keep")
   }
 
-  /** q87 — q55's near-dup clusters computed by the alternating
-    * large-star/small-star contraction instead of min-label rounds:
-    * the billion-node path (O(log² n) rounds regardless of component
-    * diameter — a web-scale link graph has chains min-label would walk
-    * hop by hop). Identical (doc_id, component, cluster_size) output,
-    * same recursive-CTE oracle as q55. */
-  val dupClustersStar: Q = (s, dir) => {
-    import s.implicits._
-    val d = Tables(s, dir, "documents").select($"doc_id")
-    val nodes = d.unionByName(
-        d.select(($"doc_id" + TrainingData.TwinOffset).as("doc_id")))
-      .select($"doc_id".as("id"))
-    val labels = ConnectedComponents.largeSmallStar(nodes,
-      dupEdges(s, dir))
-    val sizes = labels.groupBy($"component")
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, Seq("component"))
-      .select($"id".as("doc_id"), $"component", $"cluster_size")
-  }
+  /** q87 — the same query as q55 under its own registry name (same
+    * recursive-CTE oracle): there is one CC kernel. */
+  val dupClustersStar: Q = dupClusters
 
   /** q89 — fixed-point PageRank, 2 power iterations over the bidirected
     * supplier⇄part co-occurrence graph from lineitem (domain-authority
@@ -1948,15 +1933,11 @@ object Scale {
     * fails loudly rather than silently diverging. */
   val ktrussFixpoint: Q = (s, dir) => {
     import s.implicits._
-    val (cur, rounds, converged) = graft.Materialize.fixpoint(
+    // a cap exit throws inside the driver, so `rounds` is always the
+    // effective peel count of a real fixpoint
+    val (cur, rounds) = graft.Materialize.fixpoint(
       trussSampledEdges(s, dir).trunkCheckpoint(), TrussFixCap)(
       trussPeelRound)
-    // cap exit must be DISTINGUISHABLE from convergence (r9 ADVICE):
-    // without this, n_rounds == cap over a non-fixpoint frame looks
-    // like a valid answer that only the oracle's unroll would reject
-    if (!converged) throw new IllegalStateException(
-      s"q483 k-truss did not converge within $TrussFixCap rounds — " +
-        "raise TrussFixCap (and the oracle's TrussFixUnroll with it)")
     cur.select(explode(array($"u", $"v")).as("nid"))
       .agg(countDistinct($"nid").as("n_nodes"))
       .crossJoin(broadcast(cur.agg(count(lit(1)).as("n_edges"))))

@@ -1634,7 +1634,8 @@ object TrainingData {
     // history CC problem's fixpoint is ingest-epoch state, not
     // per-query work — the same persisted-artifact boundary as
     // ingestTrunk one level down. Only the returned labels are pinned;
-    // minLabel's per-round checkpoints are released as usual.
+    // the fixpoint drops each superseded round as it goes, and the
+    // final star edges are released as usual.
     val oldLabels = graft.Materialize.trunk(s,
         ("TrainingData", dir, "history_labels")) {
       ConnectedComponents.minLabel(d.select($"doc_id".as("id")), histEdges)
@@ -2184,7 +2185,7 @@ object TrainingData {
 
   /** q85 — SemDeDup-style semantic dedup decision: q40's embedding
     * near-dup PAIRS (LSH buckets → cosine ≥ 0.9 over the twin-planted
-    * corpus) closed into clusters by min-label propagation, then keep
+    * corpus) closed into clusters by connected components, then keep
     * exactly one representative per semantic cluster (the min id —
     * deterministic). This is the embedding-space mirror of q55's
     * MinHash pipeline: pairs are necessary but dedup DECISIONS need

@@ -75,19 +75,25 @@ class MaterializeSpec extends SparkSpec {
     assert(builds == 2 && !(c eq a))
   }
 
-  test("fixpoint: a cap exit reports converged = false and the " +
-    "changed-step count; the caller's checkpointed init stays readable") {
+  test("fixpoint: a cap exit throws and drops the generations the " +
+    "driver created") {
     CheckpointHygiene.release(spark)
     val init = spark.range(10).toDF("id").trunkCheckpoint()
     val before = persistedIds
     // every step shifts every id, so only the cap ends the loop
-    val (shifted, n1, conv1) =
-      Materialize.fixpoint(init, 3)(_.select(($"id" + 1).as("id")))
-    assert(!conv1 && n1 == 3, s"cap exit returned ($n1, $conv1)")
+    def shift(d: DataFrame) = d.select(($"id" + 1).as("id"))
+    val err = intercept[IllegalStateException](
+      Materialize.fixpoint(init, 3)(shift))
+    assert(err.getMessage.contains("cap of 3 rounds"), err.getMessage)
+    assert(persistedIds == before,
+      s"a capped run left ${persistedIds -- before} persisted")
+    // a kernel whose budget is its contract asks for the capped frame
+    val (shifted, n1) = Materialize.fixpoint(init, 3, acceptCap = true)(shift)
+    assert(n1 == 3, s"capped run returned $n1 changed steps")
     assert(shifted.as[Long].collect().sorted.toSeq == (3L to 12L))
     // one shrinking step, then a no-op step: converged after 1 change
-    val (kept, n2, conv2) = Materialize.fixpoint(init, 10)(_.filter($"id" < 5))
-    assert(conv2 && n2 == 1, s"fixpoint returned ($n2, $conv2)")
+    val (kept, n2) = Materialize.fixpoint(init, 10)(_.filter($"id" < 5))
+    assert(n2 == 1, s"fixpoint returned $n2 changed steps")
     assert(kept.count() == 5)
     // each loop keeps only the frame it returned; init is never dropped
     assert(persistedIds -- before == Set(rddId(shifted), rddId(kept)))
@@ -101,8 +107,7 @@ class MaterializeSpec extends SparkSpec {
   test("minLabel and Bpe.train leave behind only the checkpoints " +
     "their result still reads") {
     CheckpointHygiene.release(spark)
-    // chain 1-2-...-8 (diameter 7: min-label needs 8 rounds) plus an
-    // isolated node
+    // chain 1-2-...-8 (diameter 7) plus an isolated node
     val nodes = (1L to 8L).:+(100L).toDF("id")
     val edges = (1L until 8L).map(i => (i, i + 1)).toDF("src", "dst")
     val chainLabels = ((1L to 8L).map(_ -> 1L) :+ (100L -> 100L)).toMap
@@ -114,16 +119,9 @@ class MaterializeSpec extends SparkSpec {
     }
     val (labels, ccGrowth) =
       retained(ConnectedComponents.minLabel(nodes, edges))
-    // the result reads the final labels and the touched-node set
-    assert(ccGrowth.size <= 2, s"minLabel retained $ccGrowth")
+    // the result reads only the materialized labels
+    assert(ccGrowth.size <= 1, s"minLabel retained $ccGrowth")
     assert(labels.as[(Long, Long)].collect().toMap == chainLabels)
-
-    // same two frames for the star-contraction variant: final edges
-    // and the touched-node set
-    val (stars, lssGrowth) =
-      retained(ConnectedComponents.largeSmallStar(nodes, edges))
-    assert(lssGrowth.size <= 2, s"largeSmallStar retained $lssGrowth")
-    assert(stars.as[(Long, Long)].collect().toMap == chainLabels)
 
     // the graph kernels keep only their final frame
     val bi = edges.unionByName(edges.select($"dst".as("src"),
@@ -147,7 +145,7 @@ class MaterializeSpec extends SparkSpec {
     val truss = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (4L, 6L), (5L, 6L), (5L, 7L), (6L, 7L))
       .toDF("u", "v")
-    val ((fix, _, _), trussGrowth) =
+    val ((fix, _), trussGrowth) =
       retained(Materialize.fixpoint(truss, 10)(Scale.trussPeelRound))
     assert(trussGrowth.size <= 1, s"truss fixpoint retained $trussGrowth")
     assert(fix.count() == 6)

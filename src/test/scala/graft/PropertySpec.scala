@@ -64,24 +64,79 @@ class PropertySpec extends SparkSpec {
       val edges = (0 until 30).flatMap(i =>
         edgeGen.apply(Gen.Parameters.default, Seed(round * 100L + i)))
       val nodes = (0L until 45L)
-      // union-find reference
-      val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
-      def find(x: Long): Long =
-        if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = nodes.map(n => n -> {
-        // component label = min node id in the component
-        val root = find(n)
-        nodes.filter(m => find(m) == root).min
-      }).toMap
-      val got = graft.functions.ConnectedComponents.largeSmallStar(
+      val expected = UnionFind.minLabels(nodes, edges)
+      val got = graft.functions.ConnectedComponents.minLabel(
           nodes.toDF("id"), edges.toDF("src", "dst"))
         .as[(Long, Long)].collect().toMap
       assert(got === expected, s"round $round edges=$edges")
     }
+  }
+
+  test("CC equals union-find on paths longer than any round cap, stars, " +
+    "combs and bridged paths (minLabel and incremental)") {
+    import graft.functions.ConnectedComponents
+    // each graph on its own id range; the adversarial cases for a
+    // label-propagation kernel put the min id hundreds of hops from
+    // the far end and number the nodes in every order
+    val rng = new scala.util.Random(11)
+    val graphs = Vector.newBuilder[(String, Seq[Long], Seq[(Long, Long)])]
+    var base = 0L
+    def add(name: String, n: Int, id: Int => Int,
+        edges: Seq[(Int, Int)]): Unit = {
+      val b = base
+      graphs += ((name, (0 until n).map(b + id(_)),
+        edges.map { case (u, v) => (b + id(u), b + id(v)) }))
+      base += n
+    }
+    def path(n: Int) = (0 until n - 1).map(i => (i, i + 1))
+    for (n <- Seq(21, 30, 1000)) add(s"ascending path $n", n, identity,
+      path(n))
+    for (n <- Seq(21, 257)) add(s"descending path $n", n, n - 1 - _,
+      path(n))
+    for (n <- Seq(30, 257, 1000))
+      add(s"permuted path $n", n, rng.shuffle((0 until n).toVector), path(n))
+    add("star, hub = min id", 100, identity, (1 until 100).map((0, _)))
+    add("star, hub = max id", 100, identity, (0 until 99).map((_, 99)))
+    // a 40-node spine with a 5-node tooth under each spine node; the
+    // min id is the tip of the last tooth
+    val (spine, tooth) = (40, 5)
+    def t(s: Int, k: Int) = spine + s * tooth + k
+    val comb = path(spine) ++ (0 until spine).flatMap(s =>
+      (s, t(s, 0)) +: (0 until tooth - 1).map(k => (t(s, k), t(s, k + 1))))
+    add("comb", spine * (tooth + 1), spine * (tooth + 1) - 1 - _, comb)
+    // two 400-node paths, the end of one bridged to the middle of the
+    // other; the min id is the far end of the second
+    add("bridged paths", 800, 799 - _,
+      path(400) ++ path(400).map { case (u, v) => (u + 400, v + 400) } :+
+        ((399, 600)))
+    val all = graphs.result()
+    val isolated = (base until base + 4).toVector
+    val nodes = all.flatMap(_._2) ++ isolated
+    val edges = all.flatMap(_._3)
+    val expected = UnionFind.minLabels(nodes, edges)
+    def check(kernel: String, got: Array[(Long, Long)]): Unit = {
+      val labels = got.toMap
+      assert(labels.size == got.length, s"$kernel labels an id twice")
+      assert(labels.keySet == expected.keySet, s"$kernel lost or added ids")
+      val wrong = all.collect {
+        case (name, ids, _) if ids.exists(i => labels(i) != expected(i)) =>
+          name
+      }
+      assert(wrong.isEmpty, s"$kernel is wrong on: ${wrong.mkString(", ")}")
+      assert(isolated.forall(i => labels(i) == i))
+    }
+    check("minLabel", ConnectedComponents.minLabel(nodes.toDF("id"),
+      edges.toDF("src", "dst")).as[(Long, Long)].collect())
+    // incremental: a random half of the edges, with the ids they touch
+    // and two of the isolated nodes, is the old batch
+    val (oldEdges, newEdges) = edges.partition(_ => rng.nextBoolean())
+    val oldIds = oldEdges.flatMap(e => Seq(e._1, e._2)).toSet ++
+      isolated.take(2)
+    val oldLabels = ConnectedComponents.minLabel(oldIds.toSeq.toDF("id"),
+      oldEdges.toDF("src", "dst"))
+    check("incremental", ConnectedComponents.incremental(oldLabels,
+        nodes.filterNot(oldIds).toDF("id"), newEdges.toDF("src", "dst"))
+      .as[(Long, Long)].collect())
   }
 
   test("degree-ordered triangle count equals brute force on random " +

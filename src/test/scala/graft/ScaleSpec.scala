@@ -100,15 +100,13 @@ class ScaleSpec extends SparkSpec {
     assert(core.select($"u").distinct().as[Long].collect().toSet ===
       Set(1L, 2L, 3L, 4L), "3-core must be exactly the 4-clique")
     // one more peel changes nothing (true fixpoint)
-    assert(GraphKernels.kcore(core, k = 3, maxIter = 1).count() ===
-      core.count())
-    // capped loop equals the bounded unroll: one loop iteration is
-    // exactly one peel round of q109's `peel` — deg(5)=2 and deg(6)=1
-    // drop immediately, leaving the clique after round 1
-    val onePeel = GraphKernels.kcore(g, k = 3, maxIter = 1)
+    assert(GraphKernels.kcorePeel(3)(core).count() === core.count())
+    // one round of the loop's peel (q109's unrolled round):
+    // deg(5)=2 and deg(6)=1 drop immediately, leaving the clique
+    val onePeel = GraphKernels.kcorePeel(3)(g)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(onePeel === cliqueEdges.toSet,
-      "one capped iteration must equal one unrolled peel round")
+      "one peel round must already leave exactly the clique")
   }
 
   // ------------------------------------------------------------- as-of
@@ -361,11 +359,11 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("large/small-star matches min-label on chains, forks and singletons") {
-    // a diameter-63 chain: min-label needs ~63 rounds (capped at 20 it
-    // would be WRONG); star contraction halves heights every round
+    // a diameter-63 chain: per-hop label propagation would need ~63
+    // rounds; star contraction halves heights every round
     val chainNodes = (1L to 64L).toDF("id")
     val chainEdges = (1L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
-    val viaStar = ConnectedComponents.largeSmallStar(chainNodes, chainEdges)
+    val viaStar = ConnectedComponents.minLabel(chainNodes, chainEdges)
       .as[(Long, Long)].collect().toMap
     assert((1L to 64L).forall(viaStar(_) == 1L),
       s"chain must contract to root 1: ${viaStar.filter(_._2 != 1L)}")
@@ -374,13 +372,13 @@ class ScaleSpec extends SparkSpec {
     val n = 200L
     val rngEdges = (0L until 150L)
       .map(i => ((i * 7919L) % n, (i * i * 104729L + 13L) % n))
-      .filter { case (a, b) => a != b }.toDF("src", "dst")
-    val allNodes = (0L until n + 50L).toDF("id")
-    val a = ConnectedComponents.minLabel(allNodes, rngEdges, maxIter = 50)
+      .filter { case (a, b) => a != b }
+    val allNodes = 0L until n + 50L
+    val got = ConnectedComponents.minLabel(allNodes.toDF("id"),
+        rngEdges.toDF("src", "dst"))
       .as[(Long, Long)].collect().toMap
-    val b = ConnectedComponents.largeSmallStar(allNodes, rngEdges)
-      .as[(Long, Long)].collect().toMap
-    assert(a === b, "star and min-label components diverge")
+    assert(got === UnionFind.minLabels(allNodes, rngEdges),
+      "star contraction diverges from the union-find reference")
   }
 
   test("incremental CC equals full recompute on merges, bridges and singletons") {
@@ -588,24 +586,21 @@ class ScaleSpec extends SparkSpec {
     assert(diff.count() == 0, "window and join formulations disagree")
   }
 
-  test("k-truss fixpoint loop: cap exit reports converged=false " +
-    "(distinguishable from a real fixpoint, r9 ADVICE), and the full " +
-    "loop peels a crafted cascade to its K4 core") {
+  test("k-truss fixpoint loop: a cap exit throws; the full loop peels " +
+    "the cascade to K4") {
     // K4 on {1,2,3,4} (every edge in 2 triangles — a stable 4-truss)
     // plus a cascade: triangle {4,5,6} and triangle {5,6,7}. Round 1
     // peels 4-5, 4-6, 5-7, 6-7 (support 1); edge 5-6 survives round 1
     // with support 2 but loses both triangles, so round 2 peels it —
-    // convergence needs 2 effective rounds, making cap=1 a forced
-    // non-converged exit.
+    // convergence needs 2 effective rounds, so cap=1 is a forced cap
+    // exit, which must be an error, never a plausible edge set.
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (4L, 6L), (5L, 6L), (5L, 7L), (6L, 7L))
       .toDF("u", "v")
-    val (_, r1, conv1) = Materialize.fixpoint(edges, 1)(Scale.trussPeelRound)
-    assert(!conv1 && r1 == 1,
-      s"cap=1 must exit unconverged after 1 round, got ($r1, $conv1)")
-    val (fix, r2, conv2) =
-      Materialize.fixpoint(edges, 10)(Scale.trussPeelRound)
-    assert(conv2 && r2 == 2, s"expected fixpoint in 2 rounds, got ($r2, $conv2)")
+    intercept[IllegalStateException](
+      Materialize.fixpoint(edges, 1)(Scale.trussPeelRound))
+    val (fix, r2) = Materialize.fixpoint(edges, 10)(Scale.trussPeelRound)
+    assert(r2 == 2, s"expected fixpoint in 2 rounds, got $r2")
     val kept = fix.as[(Long, Long)].collect().toSet
     assert(kept == Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L),
       (2L, 4L), (3L, 4L)), s"fixpoint edge set was $kept")
