@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -236,20 +237,24 @@ object Warehouse {
         .filter(col(c) >= lit(lo) && col(c) <= lit(hi))
   }
 
-  /** Versioned snapshot table with time travel: each write lands under
-    * `v=N+1`, reads resolve latest (or a pinned version) from the
-    * directory listing. This is the minimal form of what Delta/Iceberg
-    * do with a transaction log — good enough for single-writer
-    * recompute-overwrite tables (the reference's dbt `materialized:
-    * table` rebuilds), and it makes q75's snapshot diff a pure read
-    * (`diff(readSnapshot(p, Some(n-1)), readSnapshot(p))`) instead of
-    * a side-saved copy. Multi-writer atomicity needs a log with
-    * compare-and-swap, not a listing — use a real table format there. */
-  def writeSnapshot(df: DataFrame, path: String): Long = {
-    val next = snapshotVersions(df.sparkSession, path)
-      .lastOption.getOrElse(0L) + 1L
-    df.write.mode(SaveMode.ErrorIfExists).parquet(s"$path/v=$next")
-    next
+  /** Versioned snapshot table with time travel: the caller keys each
+    * version (a streaming sink passes batchId + 1), it lands under
+    * `v=<version>` and counts once Spark's `_SUCCESS` marker commits it;
+    * reads resolve the latest committed (or a pinned) version. A replay
+    * is a no-op when a committed version ≥ `version` exists, and an
+    * uncommitted leftover of a crashed attempt is overwritten. `next`
+    * builds the snapshot from the latest committed one (None on the
+    * first write); returns whether this call wrote. The single-writer
+    * form of a Delta/Iceberg log — multi-writer atomicity needs a log
+    * with compare-and-swap, not a listing. */
+  def writeSnapshot(spark: SparkSession, path: String, version: Long)(
+      next: Option[DataFrame] => DataFrame): Boolean = {
+    val latest = snapshotVersions(spark, path).lastOption
+    val write = !latest.exists(_ >= version)
+    if (write)
+      next(latest.map(v => readSnapshot(spark, path, Some(v))))
+        .write.mode(SaveMode.Overwrite).parquet(s"$path/v=$version")
+    write
   }
 
   def readSnapshot(spark: SparkSession, path: String,
@@ -261,15 +266,25 @@ object Warehouse {
     spark.read.parquet(s"$path/v=$v")
   }
 
+  /** Committed versions, ascending. */
   def snapshotVersions(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
+      .filter(s => s.isDirectory && fs.exists(new Path(s.getPath, "_SUCCESS")))
       .map(_.getPath.getName)
       .collect { case s if s.startsWith("v=") => s.drop(2).toLong }
       .sorted
+  }
+
+  /** Retention for a snapshot table without time travel: deletes every
+    * committed version below the latest. */
+  def dropSupersededSnapshots(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    snapshotVersions(spark, path).dropRight(1)
+      .foreach(v => fs.delete(new Path(p, s"v=$v"), true))
   }
 
   /** MERGE INTO as a relational transform: one full-outer shuffle join
@@ -283,9 +298,13 @@ object Warehouse {
     * shuffle-free at 100 TB.
     *
     * @param delta same columns as target plus `deleteFlag` boolean;
-    *              rows flagged true are dropped whether or not matched. */
+    *              rows flagged true are dropped whether or not matched.
+    * @param sumCols columns that a match sets to target + delta instead
+    *              of the delta's value (a running count such as the
+    *              news mart's `n_versions`); a missing side counts 0. */
   def mergeUpsert(target: DataFrame, delta: DataFrame, key: String,
-      deleteFlag: String = "is_delete"): DataFrame = {
+      deleteFlag: String = "is_delete",
+      sumCols: Seq[String] = Nil): DataFrame = {
     val cols = target.columns.toSeq
     // prefix-rename BOTH sides: the delta is usually derived from the
     // target, and dataset-qualified columns on a self-join are
@@ -296,7 +315,10 @@ object Warehouse {
     val matched = col(s"__d_$key").isNotNull
     t.join(d, col(s"__t_$key") === col(s"__d_$key"), "full_outer")
       .filter(!coalesce(col(s"__d_$deleteFlag"), lit(false)))
-      .select(cols.map(c =>
-        when(matched, col(s"__d_$c")).otherwise(col(s"__t_$c")).as(c)): _*)
+      .select(cols.map { c =>
+        val (tc, dc) = (col(s"__t_$c"), col(s"__d_$c"))
+        (if (sumCols.contains(c)) coalesce(dc, lit(0)) + coalesce(tc, lit(0))
+         else when(matched, dc).otherwise(tc)).as(c)
+      }: _*)
   }
 }

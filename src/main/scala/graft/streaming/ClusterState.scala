@@ -12,30 +12,18 @@ import graft.sources.Warehouse
   * the persisted (id, component) state via
   * [[ConnectedComponents.incremental]] (label contraction: iteration
   * cost scales with the batch's delta graph, never the corpus), and
-  * every batch lands as a NEW [[Warehouse.writeSnapshot]] version — so
-  * cluster state is time-travelable per ingest ("which cluster was doc
-  * X in before tonight's crawl merged it?").
+  * batch `b` lands as snapshot version `b + 1` through
+  * [[Warehouse.writeSnapshot]] — so cluster state is time-travelable
+  * per ingest ("which cluster was doc X in before tonight's crawl
+  * merged it?").
   *
   * State grows O(corpus ids), but per-trigger compute and shuffle are
-  * O(batch + touched components). Exactly-once: the checkpoint replays
-  * an uncommitted batch into a fresh snapshot version; readers pin
-  * versions, so a replayed write is invisible to them until it
-  * completes (single-writer, like the reference's scheduled loads).
+  * O(batch + touched components). Exactly-once: a replayed batch
+  * whose version committed writes nothing; one replayed before its
+  * commit overwrites its uncommitted directory, which readers never
+  * see. Single-writer, like the reference's scheduled loads.
   */
 object ClusterState {
-
-  /** One batch: fold edges into the latest snapshot (or bootstrap). */
-  def applyBatch(batch: DataFrame, statePath: String): Unit = {
-    val spark = batch.sparkSession
-    val nodes = batch.select(col("src").as("id"))
-      .unionByName(batch.select(col("dst").as("id"))).distinct()
-    val versions = Warehouse.snapshotVersions(spark, statePath)
-    val labels =
-      if (versions.isEmpty) ConnectedComponents.minLabel(nodes, batch)
-      else ConnectedComponents.incremental(
-        Warehouse.readSnapshot(spark, statePath), nodes, batch)
-    Warehouse.writeSnapshot(labels, statePath)
-  }
 
   /** foreachBatch sink over a streaming (src, dst) edge frame. */
   def sink(edges: DataFrame, statePath: String,
@@ -43,7 +31,17 @@ object ClusterState {
     edges.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) applyBatch(batch, statePath)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) {
+          val nodes = batch.select(col("src").as("id"))
+            .unionByName(batch.select(col("dst").as("id"))).distinct()
+          Warehouse.writeSnapshot(batch.sparkSession, statePath,
+              batchId + 1) {
+            case None => ConnectedComponents.minLabel(nodes, batch)
+            case Some(labels) =>
+              ConnectedComponents.incremental(labels, nodes, batch)
+          }
+        }
+        ()
       }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.Row
+
+import graft.sources.Warehouse
 
 /** Structured-Streaming restatement of the reference's incremental
   * semantics (SURVEY.md §2.8):
@@ -37,15 +38,16 @@ object NewsStream {
     * a re-scrape with changed content hashes to a new key and flows
     * through so the mart's latest-wins dedup can supersede the old
     * version — without content in the key, dropDuplicates' first-wins
-    * would pin the stale version forever. State is bounded by the
-    * watermark — at 100 TB/day this is what keeps the dedup map from
-    * growing without limit. */
+    * would pin the stale version forever. The author joins the dedup
+    * key, not `article_key`: each co-author row of an article survives.
+    * State is bounded by the watermark — at 100 TB/day this is what
+    * keeps the dedup map from growing without limit. */
   def dedupedIngest(raw: DataFrame): DataFrame =
     raw.withColumn("article_key",
         md5(concat_ws("-", col("title"), col("source_name"), col("url"),
           coalesce(col("article_content"), lit("")))))
       .withWatermark("ingest_ts", "2 days")
-      .dropDuplicatesWithinWatermark("article_key")
+      .dropDuplicatesWithinWatermark("article_key", "author")
 
   /** Windowed per-source daily counts with late-data tolerance — the
     * streaming form of the dashboard's daily resample (A9). */
@@ -207,57 +209,31 @@ object NewsStream {
 
   /** Incremental mart refresh (the dbt-rebuild step of the reference's
     * 3-hourly DAG, done as merge-on-write instead of full recompute):
-    * each micro-batch of deduped raw rows is transformed, unioned with
-    * the existing mart, latest-wins re-deduped and rewritten. At scale
-    * this is the pattern a MERGE INTO (Delta/Iceberg) replaces — the
-    * logic is identical, the rewrite granularity differs. */
+    * batch `b` MERGEs its transformed rows into the latest committed
+    * mart (new values win, `n_versions` sums) and commits snapshot
+    * `v=b+1`, then deletes the superseded versions. A replayed batch
+    * writes nothing, and a crash mid-write leaves the last version
+    * readable. At scale a Delta/Iceberg MERGE INTO replaces the
+    * listing-based commit; the rewrite granularity differs. */
   def incrementalArticlesMart(deduped: DataFrame, warehouseDir: String,
       checkpointDir: String, loadTs: String): DataStreamWriter[Row] = {
     import graft.news.NewsTransform
+    val martPath = s"$warehouseDir/articles_mart"
     deduped.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val newRows = NewsTransform.articlesMart(
-          NewsTransform.transformed(batch.drop("article_key"), loadTs))
-        val martPath = s"$warehouseDir/articles_mart"
-        val merged =
-          if (new java.io.File(martPath).exists()) {
-            // latest-wins across old + new: incoming values supersede
-            // the stored version of a re-ingested ARTICLE_ID, and the
-            // cumulative n_versions is the SUM of both generations
-            val existing = spark.read.parquet(martPath)
-            val valueCols = existing.columns.toSeq
-              .filter(c => c != "ARTICLE_ID" && c != "n_versions")
-            val o = existing.as("o")
-            val n = newRows.withColumn("__has_new", lit(true)).as("n")
-            o.join(n, Seq("ARTICLE_ID"), "full_outer")
-              .select(col("ARTICLE_ID") +:
-                valueCols.map(c =>
-                  when(col("__has_new").isNotNull, col(s"n.$c"))
-                    .otherwise(col(s"o.$c")).as(c)) :+
-                (coalesce(col("n.n_versions"), lit(0L)) +
-                  coalesce(col("o.n_versions"), lit(0L)))
-                  .as("n_versions"): _*)
-          } else newRows
-        // stage-then-commit: write to a temp dir, swap. A plain rename
-        // is only atomic on a local filesystem — production should sit
-        // on a table format (Delta/Iceberg MERGE); here a failed swap
-        // must at least fail LOUDLY, never silently lose the mart.
-        val tmp = martPath + "__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        val target = new java.io.File(martPath)
-        if (target.exists()) {
-          import scala.reflect.io.Directory
-          if (!new Directory(target).deleteRecursively()) {
-            throw new java.io.IOException(
-              s"could not clear mart at $target; merged data staged at $tmp")
-          }
+        val wrote = Warehouse.writeSnapshot(spark, martPath, batchId + 1) {
+          prior =>
+            val newRows = NewsTransform.articlesMart(
+              NewsTransform.transformed(batch.drop("article_key"), loadTs))
+            prior.fold(newRows)(Warehouse.mergeUpsert(_,
+              newRows.withColumn("is_delete", lit(false)), "ARTICLE_ID",
+              sumCols = Seq("n_versions")))
         }
-        if (!new java.io.File(tmp).renameTo(target)) {
-          throw new java.io.IOException(
-            s"rename $tmp -> $target failed; mart missing, data staged at $tmp")
-        }
-        ()
+        // a replay still drains the batch: the ingest dedup's state
+        // stores commit only when every partition runs
+        if (!wrote) batch.write.format("noop").mode("overwrite").save()
+        Warehouse.dropSupersededSnapshots(spark, martPath)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

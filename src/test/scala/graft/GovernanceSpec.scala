@@ -108,21 +108,42 @@ class GovernanceSpec extends SparkSpec {
     import graft.sources.Warehouse
     val dir = java.nio.file.Files.createTempDirectory("snap").toString
     val path = s"$dir/tbl"
+    def latest(): Seq[(Long, String)] = Warehouse.readSnapshot(spark, path)
+      .orderBy($"k").as[(Long, String)].collect().toSeq
     assert(Warehouse.snapshotVersions(spark, path).isEmpty)
-    assert(Warehouse.writeSnapshot(
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), path) === 1L)
-    assert(Warehouse.writeSnapshot(
-      Seq((1L, "a2"), (3L, "c")).toDF("k", "v"), path) === 2L)
+    Warehouse.writeSnapshot(spark, path, 1L) { prior =>
+      assert(prior.isEmpty)
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    }
+    Warehouse.writeSnapshot(spark, path, 2L) { prior =>
+      assert(prior.get.count() === 2L, "v2 must build on v1")
+      Seq((1L, "a2"), (3L, "c")).toDF("k", "v")
+    }
+    // a replayed version is a no-op: its frame is never built
+    Warehouse.writeSnapshot(spark, path, 2L)(_ =>
+      sys.error("a committed version must not be rebuilt"))
     assert(Warehouse.snapshotVersions(spark, path) === Seq(1L, 2L))
-    assert(Warehouse.readSnapshot(spark, path).orderBy($"k")
-      .as[(Long, String)].collect().toSeq ===
-      Seq((1L, "a2"), (3L, "c")), "latest must be v2")
+    assert(latest() === Seq((1L, "a2"), (3L, "c")), "latest must be v2")
     assert(Warehouse.readSnapshot(spark, path, Some(1L)).orderBy($"k")
       .as[(Long, String)].collect().toSeq ===
       Seq((1L, "a"), (2L, "b")), "time travel to v1")
     intercept[IllegalArgumentException] {
       Warehouse.readSnapshot(spark, path, Some(9L))
     }
+    // a crashed attempt at v3 left parquet data but no _SUCCESS marker:
+    // readers never see it, and committing v3 replaces it
+    Seq((7L, "torn")).toDF("k", "v").write.parquet(s"$path/v=3")
+    assert(new java.io.File(s"$path/v=3/_SUCCESS").delete())
+    assert(Warehouse.snapshotVersions(spark, path) === Seq(1L, 2L))
+    assert(latest() === Seq((1L, "a2"), (3L, "c")), "uncommitted v3 read")
+    Warehouse.writeSnapshot(spark, path, 3L)(prior =>
+      prior.get.filter($"k" === 3L))
+    assert(Warehouse.snapshotVersions(spark, path) === Seq(1L, 2L, 3L))
+    assert(latest() === Seq((3L, "c")), "v3 must replace the leftover")
+    // retention keeps only the latest committed version
+    Warehouse.dropSupersededSnapshots(spark, path)
+    assert(Warehouse.snapshotVersions(spark, path) === Seq(3L))
+    assert(new java.io.File(path).list().toSet === Set("v=3"))
   }
 
   test("q226 fingerprint: root folds the source digests, digest " +

@@ -25,6 +25,19 @@ class NewsStreamSpec extends SparkSpec {
         spark.sparkContext.parallelize(rows), Schemas.rawNews)
       .coalesce(1).write.mode("append").parquet(dir)
 
+  private def logIds(checkpoint: String, log: String): Seq[Long] =
+    new java.io.File(s"$checkpoint/$log").list().toSeq
+      .filter(_.forall(_.isDigit)).map(_.toLong).sorted
+
+  /** Crash after batch `id`'s sink write, before its commit-log entry:
+    * its commit and every later batch's log entries are deleted, so a
+    * restart replays batch `id`. */
+  private def uncommit(checkpoint: String, id: Long): Unit =
+    for ((log, from) <- Seq("commits" -> id, "offsets" -> (id + 1));
+         j <- logIds(checkpoint, log) if j >= from;
+         name <- Seq(s"$j", s".$j.crc"))
+      new java.io.File(s"$checkpoint/$log/$name").delete()
+
   test("streaming ingest dedups re-scraped articles and resumes " +
     "exactly-once from checkpoint") {
     val base = Files.createTempDirectory("graft-stream").toString
@@ -32,11 +45,14 @@ class NewsStreamSpec extends SparkSpec {
     val warehouse = s"$base/warehouse"
     val checkpoint = s"$base/checkpoint"
 
-    // batch 1: two articles, one duplicated within the batch
+    // batch 1: two articles, one duplicated within the batch, the other
+    // with two co-authors (one row each)
+    def coAuthor(r: Row): Row = Row.fromSeq(r.toSeq.updated(4, "John Roe"))
     writeBatch(landing, Seq(
       mkRow(1, "T1", "2024-01-01 00:00:00"),
       mkRow(2, "T1", "2024-01-01 01:00:00"),
-      mkRow(3, "T2", "2024-01-01 00:30:00")))
+      mkRow(3, "T2", "2024-01-01 00:30:00"),
+      coAuthor(mkRow(6, "T2", "2024-01-01 00:30:00"))))
 
     def runOnce(): Unit = NewsStream.runAvailableNow(
       NewsStream.toWarehouse(
@@ -47,17 +63,22 @@ class NewsStreamSpec extends SparkSpec {
     runOnce()
     val out1 = Warehouse.read(spark, warehouse, "raw_news_stream")
     assert(out1.select($"article_key").distinct().count() == 2)
-    assert(out1.count() == 2, "in-batch duplicate not dropped")
+    assert(out1.count() == 3, "in-batch duplicate not dropped")
+    assert(out1.filter($"title" === "T2").select($"author").as[String]
+      .collect().toSet === Set("Jane Doe", "John Roe"),
+      "a co-author row was lost")
 
-    // batch 2: re-scrape of T2 (cross-batch dup) + new T3; restart the
-    // stream from the same checkpoint — batch 1 files must not replay
+    // batch 2: re-scrapes of both T2 co-author rows (cross-batch dups) +
+    // new T3; restart the stream from the same checkpoint — batch 1
+    // files must not replay
     writeBatch(landing, Seq(
       mkRow(4, "T2", "2024-01-01 02:00:00"),
+      coAuthor(mkRow(7, "T2", "2024-01-01 02:00:00")),
       mkRow(5, "T3", "2024-01-01 02:30:00")))
     runOnce()
     val out2 = Warehouse.read(spark, warehouse, "raw_news_stream")
-    assert(out2.count() == 3,
-      s"expected 3 rows after resume, got ${out2.count()}")
+    assert(out2.count() == 4,
+      s"expected 4 rows after resume, got ${out2.count()}")
     assert(out2.select($"article_key").distinct().count() == 3)
   }
 
@@ -125,8 +146,9 @@ class NewsStreamSpec extends SparkSpec {
     writeBatch(landing, Seq(
       row(1, "T1", "first version content", "2024-01-01 00:00:00"),
       row(2, "T2", "other article", "2024-01-01 00:00:00")))
+    val mart = s"$base/articles_mart"
     run()
-    val m1 = spark.read.parquet(s"$base/articles_mart")
+    val m1 = Warehouse.readSnapshot(spark, mart)
     assert(m1.count() == 2)
 
     // re-ingest T1 with content that differs ONLY after the 50-char
@@ -142,8 +164,11 @@ class NewsStreamSpec extends SparkSpec {
     run()
     writeBatch(landing, Seq(
       row(5, "T9", changedTail, "2024-01-03 00:00:00")))
+    // the watermark's no-data batches follow data batches, so the
+    // batch that carried the changed T9 is the first of this run
+    val t9Batch = logIds(s"$base/ckpt", "commits").last + 1
     run()
-    val m2 = spark.read.parquet(s"$base/articles_mart")
+    val m2 = Warehouse.readSnapshot(spark, mart)
     assert(m2.count() == 4, s"expected 4 mart rows, got ${m2.count()}")
     val t9 = m2.filter(col("TITLE") === "T9")
       .select(col("n_versions"), col("ARTICLE_CONTENT")).head()
@@ -151,6 +176,18 @@ class NewsStreamSpec extends SparkSpec {
       s"cumulative versions should sum to 2, got ${t9.getLong(0)}")
     assert(t9.getString(1).contains("CHANGED"),
       "latest re-ingest's content must win")
+    // superseded versions are deleted: one committed version remains
+    val versions = Warehouse.snapshotVersions(spark, mart)
+    assert(versions.size == 1, s"expected one mart version, got $versions")
+
+    // crash after the changed T9's mart commit, before its checkpoint
+    // commit: the restart replays that batch, which must not merge twice
+    val clean = m2.collect().toSet
+    uncommit(s"$base/ckpt", t9Batch)
+    run()
+    assert(Warehouse.snapshotVersions(spark, mart) === versions)
+    assert(Warehouse.readSnapshot(spark, mart).collect().toSet === clean,
+      "a replayed batch changed the mart")
   }
 
   test("stream-stream join matches sentiment to articles within the " +
@@ -354,8 +391,10 @@ class NewsStreamSpec extends SparkSpec {
       .schema("src BIGINT, dst BIGINT")
       .option("maxFilesPerTrigger", "1")
       .parquet(landing)
-    val q = ClusterState.sink(edges, state, s"$base/ckpt").start()
-    q.awaitTermination()
+    def run(): Unit =
+      ClusterState.sink(edges, state, s"$base/ckpt").start()
+        .awaitTermination()
+    run()
     assert(Warehouse.snapshotVersions(spark, state) === Seq(1L, 2L))
     val fin = Warehouse.readSnapshot(spark, state)
       .as[(Long, Long)].collect().toMap
@@ -368,6 +407,12 @@ class NewsStreamSpec extends SparkSpec {
     val v1 = Warehouse.readSnapshot(spark, state, Some(1L))
       .as[(Long, Long)].collect().toMap
     assert(v1(5L) === 5L && v1(6L) === 5L && !v1.contains(0L))
+    // a batch replayed after its snapshot committed writes no new version
+    uncommit(s"$base/ckpt", logIds(s"$base/ckpt", "commits").last)
+    run()
+    assert(Warehouse.snapshotVersions(spark, state) === Seq(1L, 2L))
+    assert(Warehouse.readSnapshot(spark, state)
+      .as[(Long, Long)].collect().toMap === fin)
   }
 
   test("CSV staging codec round-trips the raw_news schema") {
