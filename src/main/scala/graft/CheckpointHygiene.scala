@@ -16,29 +16,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * the pinned ones. Safety contract: call it only at a query boundary,
   * after the consuming action finished — a localCheckpoint truncates
   * lineage, so its blocks are unrecoverable once dropped (this is
-  * precisely why the sweep must not unpersist mid-query). Session
-  * trunks ([[Materialize.trunk]]) are the only pinned frames; explicit
+  * precisely why the sweep must not unpersist mid-query). Pinned = the
+  * live session trunks ([[Materialize.trunk]]) on this context: they
+  * hand out one truncated-lineage frame to many queries, so dropping
+  * them would poison every later trunk hit. Explicit
   * `persist()`/`cache()` frames (e.g. the NewsPipeline trunk, which CAN
   * recompute from lineage) are left alone. A kernel that knows a
   * generation is dead drops it early with [[drop]].
   */
 object CheckpointHygiene {
-  /** RDD ids that [[release]] must never drop: session trunks hand out
-    * the same truncated-lineage frame to many queries — their blocks
-    * are unrecoverable, so dropping them at a query boundary would
-    * poison every later trunk hit. */
-  private val pinnedIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** Exempt the RDD behind checkpointed frame `df` from [[release]]
-    * for the life of the session. Returns `df`. */
-  def pin(df: DataFrame): DataFrame = {
-    df.queryExecution.logical match {
-      case lr: LogicalRDD => pinnedIds.add(lr.rdd.id)
-      case _ => // not a checkpoint leaf; release never touches it
-    }
-    df
-  }
 
   /** Unpersist a dead checkpoint generation now instead of at the next
     * query boundary. Dataset.unpersist only clears CacheManager
@@ -51,16 +37,18 @@ object CheckpointHygiene {
     case _ => df.unpersist(blocking = false)
   }
 
-  /** Unpersist all non-pinned checkpointed RDDs. Returns how many were
-    * released. Non-blocking: block deletion proceeds async.
+  /** Unpersist all checkpointed RDDs of `spark`'s context except the
+    * trunk checkpoints. Returns how many were released. Non-blocking:
+    * block deletion proceeds async.
     * `isCheckpointed` is true only after the (eager) checkpoint
     * materialized, and false for plain persist()/cache() frames —
     * exactly the split we need (plain-persisted trunks like the
     * NewsPipeline marts keep their lineage and may recompute). */
   def release(spark: SparkSession): Int = {
-    val doomed = spark.sparkContext.getPersistentRDDs
-      .filter { case (id, rdd) =>
-        rdd.isCheckpointed && !pinnedIds.contains(id) }
+    val sc = spark.sparkContext
+    val pinned = Materialize.trunkCheckpointIds(sc)
+    val doomed = sc.getPersistentRDDs
+      .filter { case (id, rdd) => rdd.isCheckpointed && !pinned(id) }
       .values.toSeq
     doomed.foreach(_.unpersist(blocking = false))
     doomed.size

@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -20,28 +24,26 @@ import org.apache.spark.sql.execution.LogicalRDD
   * All library code therefore checkpoints through [[trunkCheckpoint]]
   * instead of calling `localCheckpoint` directly. Besides
   * checkpointing, it records PROVENANCE: the pre-truncation analyzed
-  * plan, keyed by the checkpoint RDD's id. A plan walker that reaches a
+  * plan, keyed by the checkpoint RDD. A plan walker that reaches a
   * `LogicalRDD` leaf can resume on the recorded original plan via
   * [[lineageOf]] — full-lineage analysis at zero rebuild cost (an
   * earlier design re-ran the query builder with checkpointing disabled;
   * iterative kernels then stack k rounds of un-truncated lineage and
   * plan analysis goes super-linear — unusably slow even at sf0.001).
-  * The map key is the RDD id, not the plan node: self-joins copy the
+  * The map key is the RDD, not the plan node: self-joins copy the
   * `LogicalRDD` via `newInstance` (fresh exprIds) but share the RDD.
   *
   * SESSION TRUNKS ([[trunk]]): frames a production pipeline writes once
   * per run and every consumer reads (the dbt `transformed` table and
-  * marts, edge lists, near-dup group tables — SURVEY §4). [[trunk]] is
-  * the one place that decides how such a frame is memoized, per mode:
-  *  - normal: built once per (session, key), materialized eagerly (a
-  *    pinned checkpoint unless the caller passes its own
-  *    materialization) and returned by reference to every later query.
-  *  - [[fresh]]: checkpoints behave normally (bounded plans) but the
-  *    session memo is bypassed, so a perturbation harness re-executing
-  *    a query rebuilds its trunks under the CURRENT session config
-  *    instead of reading a frame materialized under the default
-  *    config. Each key is built once per fresh scope, unpinned —
-  *    CheckpointHygiene.release reclaims it at the next query boundary.
+  * marts, edge lists, near-dup group tables — SURVEY §4). The trunk
+  * memo is the one record of which frames a session keeps: each is
+  * built once per (session, key), materialized eagerly (a checkpoint
+  * unless the caller passes its own materialization) and returned by
+  * reference to every later query. [[CheckpointHygiene.release]] keeps
+  * the checkpoints of the trunks of every session on its context, and
+  * [[forget]] ends a session's trunks. A harness that needs trunks
+  * rebuilt under another config (HashStabilitySpec's perturbed runs)
+  * builds them in its own `spark.newSession()` and forgets it after.
   *
   * CONVERGENCE LOOPS ([[fixpoint]]): every iterative kernel that runs a
   * relational round to a fixpoint (connected components, LPA, k-core,
@@ -52,74 +54,50 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Materialize {
 
-  private val freshDepth = new ThreadLocal[Integer] {
-    override def initialValue: Integer = 0
-  }
-  // per-[[fresh]]-scope memo: one trunk build per scope even when
-  // several consumers inside the scope ask for the same key. Created
-  // at the OUTERMOST fresh entry, dropped at its exit, so distinct
-  // perturbed runs never share a build.
-  private val freshScope =
-    new ThreadLocal[java.util.HashMap[Any, DataFrame]]
-
-  /** Run `body` with the session trunk memo bypassed but checkpoints
-    * intact: trunks rebuild under the caller's current session config.
-    * Within one (outermost) fresh scope each trunk key is still built
-    * exactly once, like a production run that writes the artifact once
-    * and reads it everywhere. */
-  def fresh[T](body: => T): T = {
-    val depth = freshDepth.get
-    if (depth == 0) freshScope.set(new java.util.HashMap[Any, DataFrame])
-    freshDepth.set(depth + 1)
-    try body finally {
-      freshDepth.set(depth)
-      if (depth == 0) freshScope.remove()
-    }
-  }
-
-  /** Memoize `build` per `key` for the lifetime of the current [[fresh]]
-    * scope; only called inside one. */
-  private def scopedMemo(key: Any)(build: => DataFrame): DataFrame = {
-    val m = freshScope.get
-    val hit = m.get(key)
-    if (hit != null) hit
-    else { val v = build; m.put(key, v); v }
-  }
-
   private val trunks =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, Any),
       DataFrame]()
 
-  /** Normal-mode trunk materialization: an eager checkpoint, pinned so
-    * the per-query [[CheckpointHygiene.release]] sweep never drops a
-    * truncated-lineage frame later queries still read. Only the
-    * returned frame's RDD is pinned; checkpoints taken inside the build
-    * stay releasable. */
-  private def pinnedCheckpoint(df: DataFrame): DataFrame =
-    CheckpointHygiene.pin(df.trunkCheckpoint())
-
   /** The session trunk for `key` (namespace keys per module, e.g.
-    * `("GraphTrunk", dir, "co_edges")`): built once per session and
-    * handed out by reference; see the object doc for the per-mode
-    * behaviour. `materialize` is the normal-mode materialization of
-    * the build (default [[pinnedCheckpoint]]).
+    * `("GraphTrunk", dir, "co_edges")`): built once per session, handed
+    * out by reference and kept until [[forget]]. `materialize` turns
+    * the build into the kept frame (default an eager checkpoint, which
+    * [[CheckpointHygiene.release]] then skips).
     *
     * Lookup is get → build → putIfAbsent, so a build may resolve other
     * trunks. Two threads racing on one key may both build; the first
-    * insert wins and every caller gets that frame. */
+    * insert wins and every caller gets that frame, and the loser's
+    * checkpoint is released at the next query boundary. */
   def trunk(s: SparkSession, key: Any,
-      materialize: DataFrame => DataFrame = pinnedCheckpoint)(
-      build: => DataFrame): DataFrame =
-    if (freshDepth.get > 0)
-      scopedMemo((s, key)) { build.trunkCheckpoint() }
+      materialize: DataFrame => DataFrame = _.trunkCheckpoint())(
+      build: => DataFrame): DataFrame = {
+    val k = (s, key)
+    val hit = trunks.get(k)
+    if (hit != null) hit
     else {
-      val k = (s, key)
-      val hit = trunks.get(k)
-      if (hit != null) hit
-      else {
-        val v = materialize(build)
-        val won = trunks.putIfAbsent(k, v)
-        if (won == null) v else won
+      val v = materialize(build)
+      val won = trunks.putIfAbsent(k, v)
+      if (won == null) v else won
+    }
+  }
+
+  /** Ids of the checkpoint RDDs behind the trunks of every session on
+    * `sc` (compared by reference, so a stale entry of a stopped
+    * context never matches a reused id). */
+  private[graft] def trunkCheckpointIds(sc: SparkContext): Set[Int] =
+    trunks.asScala.iterator.collect {
+      case ((s, _), df) if s.sparkContext eq sc => df.queryExecution.logical
+    }.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+
+  /** End the trunks of session `s`: remove its entries and drop their
+    * checkpoints. A `persist`ed trunk is left cached: the CacheManager
+    * is shared by every session of a context, so unpersisting it would
+    * also remove the entry another session's equal plan reads. */
+  def forget(s: SparkSession): Unit =
+    trunks.keySet.asScala.filter(_._1 eq s).foreach { k =>
+      Option(trunks.remove(k)).foreach { df =>
+        if (df.queryExecution.logical.isInstanceOf[LogicalRDD])
+          CheckpointHygiene.drop(df)
       }
     }
 
@@ -174,17 +152,20 @@ object Materialize {
     (cur, if (converged) steps - 1 else steps)
   }
 
-  /** Pre-truncation analyzed plan of each checkpoint, by RDD id.
-    * Bounded: one small plan tree per checkpoint in the session (the
-    * recorded plan's own upstream checkpoints are themselves truncated
-    * `LogicalRDD`s, so entries never stack k rounds of lineage). */
-  private val provenance =
-    new java.util.concurrent.ConcurrentHashMap[Int, LogicalPlan]()
+  /** Pre-truncation analyzed plan of each checkpoint, keyed on the
+    * checkpoint RDD itself (identity; weakly). One small plan tree per
+    * live checkpoint (the recorded plan's own upstream checkpoints are
+    * themselves truncated `LogicalRDD`s, so entries never stack k
+    * rounds of lineage). A recorded plan holds its upstream RDDs, so a
+    * live frame keeps its whole chain walkable, and an entry dies with
+    * the last reference to its RDD. */
+  private val provenance = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], LogicalPlan]())
 
   /** The recorded pre-checkpoint plan behind a `LogicalRDD` leaf, if
     * the frame came from [[trunkCheckpoint]]. */
   def lineageOf(plan: LogicalPlan): Option[LogicalPlan] = plan match {
-    case lr: LogicalRDD => Option(provenance.get(lr.rdd.id))
+    case lr: LogicalRDD => Option(provenance.get(lr.rdd))
     case _ => None
   }
 
@@ -205,7 +186,7 @@ object Materialize {
       val cp = df.localCheckpoint(eager)
       cp.queryExecution.analyzed match {
         case lr: LogicalRDD =>
-          provenance.put(lr.rdd.id, df.queryExecution.analyzed)
+          provenance.put(lr.rdd, df.queryExecution.analyzed)
         case _ => // not a plain checkpoint leaf; nothing to record
       }
       cp

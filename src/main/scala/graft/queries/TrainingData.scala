@@ -1633,7 +1633,7 @@ object TrainingData {
     // history labels as a session trunk (r10 VERDICT item 4): the
     // history CC problem's fixpoint is ingest-epoch state, not
     // per-query work — the same persisted-artifact boundary as
-    // ingestTrunk one level down. Only the returned labels are pinned;
+    // ingestTrunk one level down. Only the returned labels are kept;
     // the fixpoint drops each superseded round as it goes, and the
     // final star edges are released as usual.
     val oldLabels = graft.Materialize.trunk(s,

@@ -28,13 +28,15 @@ import org.apache.spark.sql.types.DoubleType
   * LogicalRDD hides it; this is how the r6 q316/q344 class escaped the
   * detector) is closed via [[Materialize]] provenance: every
   * trunkCheckpoint records its pre-truncation analyzed plan keyed by
-  * the checkpoint RDD id, and the detector resumes its walk on the
+  * the checkpoint RDD, and the detector resumes its walk on the
   * recorded plan whenever it reaches a LogicalRDD leaf — full-lineage
   * discovery at zero rebuild cost. Queries whose Round is reachable
-  * ONLY through provenance ("checkpoint-hidden") execute their
-  * perturbation pair in [[Materialize.fresh]] mode, so the trunk
-  * rebuilds under the hostile config instead of being read from a
-  * frame materialized under the default one.
+  * ONLY through provenance ("checkpoint-hidden") run each half of
+  * their perturbation pair in its own `spark.newSession()`, the hostile
+  * config set on the second only, so every session trunk rebuilds
+  * under that session's config instead of being read from a frame
+  * materialized under the default one. Both sessions are
+  * [[Materialize.forget]]-ed after the pair.
   */
 class HashStabilitySpec extends SparkSpec {
 
@@ -45,14 +47,14 @@ class HashStabilitySpec extends SparkSpec {
     * double (q386's density grid, q441/q227's heldout scores, q475's
     * vote fingerprints, the LM count frames, …) moves that Round
     * behind a trunkCheckpoint, so 12 previously direct-only members
-    * became provenance-reachable — each verified to execute
-    * trunk-fresh here, which is exactly the behavior the
-    * perturbation pair needs. (History: 51 at registry 486.) Any
+    * became provenance-reachable — each verified to rebuild its trunks
+    * per run here, which is exactly the behavior the perturbation pair
+    * needs. (History: 51 at registry 486.) Any
     * query that newly rounds through a checkpoint must bump this
     * count IN THE SAME COMMIT.
     * 63 → 64 (r11): q448's value-histogram collapse pins the
     * (col, value, multiplicity) frame, moving its money/discount
-    * Rounds behind the checkpoint — verified trunk-fresh here. */
+    * Rounds behind the checkpoint — verified to rebuild per run here. */
   private val ExpectedCheckpointHidden = 64
 
   private def directRounds(plan: LogicalPlan): Boolean =
@@ -66,8 +68,8 @@ class HashStabilitySpec extends SparkSpec {
     * recorded pre-checkpoint plan of every LogicalRDD leaf that came
     * from trunkCheckpoint, recursively. Detected INDEPENDENTLY of
     * direct Rounds — a query with both a direct Round and a hidden one
-    * must still run trunk-fresh, or the hidden Round's trunk is served
-    * from the default-config materialization and never sees the
+    * must still run in its own sessions, or the hidden Round's trunk is
+    * served from the default-config materialization and never sees the
     * perturbation (the r6-class blind spot for mixed queries).
     *
     * The verdict is MEMOIZED per checkpoint RDD id: provenance forms a
@@ -118,7 +120,7 @@ class HashStabilitySpec extends SparkSpec {
       "provenance recursion must surface the Round behind the " +
         "checkpoint")
     // and a self-join copy (newInstance → new exprIds, same RDD) must
-    // still resolve through the RDD-id key
+    // still resolve through the RDD key
     val joined = planted.as("l").join(planted.as("r"))
     assert(scanLineage(joined.queryExecution.analyzed),
       "provenance lookup must survive LogicalRDD newInstance copies")
@@ -129,7 +131,7 @@ class HashStabilitySpec extends SparkSpec {
     val conf = spark.conf
     // discover on the FULL lineage (direct walk + checkpoint
     // provenance); members whose Round is reachable only through
-    // provenance must EXECUTE trunk-fresh below
+    // provenance must EXECUTE in their own sessions below
     val family = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         val plan =
@@ -155,29 +157,31 @@ class HashStabilitySpec extends SparkSpec {
       s"checkpoint-hidden enrollment changed: $hidden discovered vs " +
         s"$ExpectedCheckpointHidden pinned. A query that rounds a " +
         "double behind a trunkCheckpoint was added or removed — verify " +
-        "it executes trunk-fresh here, then bump " +
+        "it rebuilds its trunks per run here, then bump " +
         "ExpectedCheckpointHidden.")
+    val hostile = Seq("spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.files.maxPartitionBytes" -> "1m",
+      "spark.sql.adaptive.enabled" -> "false")
     val diffs = family.flatMap { case (name, fn, checkpointHidden) =>
-      def run() =
-        if (checkpointHidden)
-          Materialize.fresh { rowsSorted(fn(spark, sfDir)) }
-        else rowsSorted(fn(spark, sfDir))
-      val base = run()
-      val saved = Seq("spark.sql.shuffle.partitions",
-        "spark.sql.files.maxPartitionBytes",
-        "spark.sql.adaptive.enabled").map(k => k -> conf.get(k))
-      try {
-        conf.set("spark.sql.shuffle.partitions", "7")
-        conf.set("spark.sql.files.maxPartitionBytes", "1m")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        val perturbed = run()
-        if (base == perturbed) None
-        else Some(s"$name: ${base.size} vs ${perturbed.size} rows; " +
-          s"first diff ${base.zip(perturbed).find(p => p._1 != p._2)}")
-      } finally {
-        saved.foreach { case (k, v) => conf.set(k, v) }
-        CheckpointHygiene.release(spark) // reclaim fresh-mode trunks
-      }
+      val (base, perturbed) =
+        if (checkpointHidden) {
+          // each run builds its trunks in its own session
+          val (s1, s2) = (spark.newSession(), spark.newSession())
+          hostile.foreach { case (k, v) => s2.conf.set(k, v) }
+          try (rowsSorted(fn(s1, sfDir)), rowsSorted(fn(s2, sfDir)))
+          finally { Materialize.forget(s1); Materialize.forget(s2) }
+        } else {
+          val base = rowsSorted(fn(spark, sfDir))
+          val saved = hostile.map { case (k, _) => k -> conf.get(k) }
+          try {
+            hostile.foreach { case (k, v) => conf.set(k, v) }
+            (base, rowsSorted(fn(spark, sfDir)))
+          } finally saved.foreach { case (k, v) => conf.set(k, v) }
+        }
+      CheckpointHygiene.release(spark)
+      if (base == perturbed) None
+      else Some(s"$name: ${base.size} vs ${perturbed.size} rows; " +
+        s"first diff ${base.zip(perturbed).find(p => p._1 != p._2)}")
     }
     assert(diffs.isEmpty,
       s"${diffs.size} mirrored-double queries drifted under partitioning " +

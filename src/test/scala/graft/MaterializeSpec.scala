@@ -3,20 +3,26 @@ package graft
 import graft.Materialize.TrunkCheckpointOps
 import graft.functions.{Bpe, ConnectedComponents, GraphKernels}
 import graft.queries.Scale
-import org.apache.spark.sql.DataFrame
+import java.lang.ref.WeakReference
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** The session-trunk seam ([[Materialize.trunk]]), the fixpoint driver
-  * ([[Materialize.fixpoint]]) and the checkpoint drop discipline of the
-  * iterative kernels: what stays in block storage after a trunk build
-  * or a kernel call is exactly what a later reader still needs. */
+/** The session-trunk seam ([[Materialize.trunk]], [[Materialize.forget]]),
+  * checkpoint provenance, the fixpoint driver ([[Materialize.fixpoint]])
+  * and the checkpoint drop discipline of the iterative kernels: what
+  * stays in block storage or in the seam's maps after a trunk build, a
+  * session or a kernel call is exactly what a later reader still
+  * needs. */
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def rddId(df: DataFrame): Int = df.queryExecution.logical match {
-    case lr: LogicalRDD => lr.rdd.id
-    case other => fail(s"not a checkpoint leaf: ${other.nodeName}")
-  }
+  private def leaf(df: DataFrame): LogicalRDD =
+    df.queryExecution.logical match {
+      case lr: LogicalRDD => lr
+      case other => fail(s"not a checkpoint leaf: ${other.nodeName}")
+    }
+  private def rddId(df: DataFrame): Int = leaf(df).rdd.id
   private def persistedIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
   // keys are per test so specs sharing the session never collide
@@ -58,21 +64,88 @@ class MaterializeSpec extends SparkSpec {
     assert(t.count() == 50)
   }
 
-  test("a fresh scope builds a key once; release reclaims that build") {
+  // HashStabilitySpec's hostile conf, minus the scan split (no file
+  // is read here)
+  private def hostileSession(): SparkSession = {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "7")
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2
+  }
+
+  test("a new session builds its own trunk under its own conf; release " +
+    "from either session keeps both sessions' trunks") {
     var builds = 0
-    def get() = Materialize.trunk(spark, key("fresh", "t")) {
+    def get(s: SparkSession) = Materialize.trunk(s, key("sess", "t")) {
       builds += 1
-      spark.range(20).toDF("id")
+      s.range(100).toDF("id").groupBy(($"id" % 10).as("k")).count()
     }
-    val (a, b) = Materialize.fresh { (get(), Materialize.fresh(get())) }
-    assert(builds == 1 && (a eq b))
-    val id = rddId(a)
-    assert(persistedIds(id))
+    val t1 = get(spark)
+    val s2 = hostileSession()
+    try {
+      val t2 = get(s2)
+      assert(builds == 2 && !(t2 eq t1))
+      assert(leaf(t2).rdd.getNumPartitions == 7,
+        "the new session's trunk was not built under its own conf")
+      assert((get(spark) eq t1) && (get(s2) eq t2) && builds == 2)
+      for (s <- Seq(spark, s2)) {
+        CheckpointHygiene.release(s)
+        assert(persistedIds(rddId(t1)) && persistedIds(rddId(t2)),
+          "release dropped a live session's trunk")
+      }
+      assert(t2.count() == 10 && t1.count() == 10)
+    } finally Materialize.forget(s2)
+  }
+
+  test("forget drops one session's trunk checkpoints and the next " +
+    "lookup rebuilds; other sessions' trunks and cache entries stay") {
+    var builds = 0
+    def get(s: SparkSession) = Materialize.trunk(s, key("forget", "t")) {
+      builds += 1
+      s.range(40).toDF("id")
+    }
+    // both sessions persist one plan: one CacheManager entry, shared
+    def cached(s: SparkSession) = Materialize.trunk(s, key("forget", "p"),
+      _.persist(StorageLevel.MEMORY_AND_DISK))(s.range(30).toDF("id"))
+    val (t1, p1) = (get(spark), cached(spark))
+    val s2 = hostileSession()
+    val t2 = get(s2)
+    cached(s2)
+    Materialize.forget(s2)
+    assert(!persistedIds(rddId(t2)), "a forgotten trunk stayed persisted")
+    assert(persistedIds(rddId(t1)) && t1.count() == 40)
+    assert(p1.storageLevel != StorageLevel.NONE,
+      "forget unpersisted the shared session's cached trunk")
+    assert(Materialize.trunk(spark, key("forget", "t"))(fail("rebuilt")) eq t1)
+    val t2b = get(s2)
+    assert(builds == 3 && !(t2b eq t2) && t2b.count() == 40)
+    Materialize.forget(s2)
+  }
+
+  test("a checkpoint's provenance dies with its RDD: an unreachable " +
+    "frame's upstream chain is collected") {
+    // any lookup through lineageOf is a map access; the probe is a
+    // checkpoint leaf so the lookup reaches the map
+    val probe = spark.range(1).toDF("id").trunkCheckpoint()
+      .queryExecution.analyzed
+    // a method scope, so no local of either frame outlives it: b's
+    // recorded plan holds a's LogicalRDD, the rest is garbage
+    def chain(): WeakReference[AnyRef] = {
+      val a = spark.range(16).toDF("id").trunkCheckpoint()
+      val b = a.select(($"id" + 1).as("id")).trunkCheckpoint()
+      assert(Materialize.lineageOf(b.queryExecution.analyzed).nonEmpty)
+      new WeakReference[AnyRef](leaf(a).rdd)
+    }
+    val aRdd = chain()
     CheckpointHygiene.release(spark)
-    assert(!persistedIds(id), "a fresh-scope trunk was pinned")
-    // the fresh build does not enter the memo
-    val c = get()
-    assert(builds == 2 && !(c eq a))
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (aRdd.get != null && System.nanoTime() < deadline) {
+      System.gc()
+      Materialize.lineageOf(probe)
+      Thread.sleep(50)
+    }
+    assert(aRdd.get == null,
+      "a dropped checkpoint's RDD is still reachable after 10 s of GC")
   }
 
   test("fixpoint: a cap exit throws and drops the generations the " +

@@ -522,26 +522,6 @@ class NewsStreamSpec extends SparkSpec {
       s"quarantine must keep the raw row: ${bad.toSeq}")
   }
 
-  test("telemetry listener captures per-action row and shuffle metrics") {
-    val t = new graft.Telemetry.MetricsCapture
-    spark.listenerManager.register(t)
-    try {
-      Tables(spark, sfDir, "events")
-        .groupBy($"event_type").count().collect()
-      // listener delivery is async on the bus — poll briefly
-      val deadline = System.nanoTime() + 10_000_000_000L
-      var snap = t.snapshot
-      while (snap.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(100); snap = t.snapshot
-      }
-      assert(snap.nonEmpty, "no capture arrived within 10 s")
-      val m = snap.last
-      assert(!m.failed && m.durationNs > 0)
-      assert(m.metrics.getOrElse("numOutputRows", 0L) > 0L,
-        s"metrics captured: ${m.metrics.keys.toSeq.sorted}")
-    } finally spark.listenerManager.unregister(t)
-  }
-
   test("warehouse mart write partitions by date for pruning") {
     val base = Files.createTempDirectory("graft-wh").toString
     val df = spark.createDataFrame(
