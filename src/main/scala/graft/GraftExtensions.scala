@@ -16,7 +16,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.IntersectCountRewrite)
-    ext.injectCheckRule(session => graft.plans.ScaleGuard.check(session))
     ext.injectParser((session, delegate) =>
       new graft.plans.GraftSqlParser(session, delegate))
     ext.injectFunction((

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-up harness: derives an N× dataset from a driver-generated
@@ -34,13 +33,8 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir, copiesStr) = args
     val copies = copiesStr.toInt
-    val spark = SparkSession.builder()
-      .appName("graft-scaleup")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.runnerSession(inDir,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     for (name <- Tables.names) {
       val df = spark.read.parquet(s"$inDir/$name.parquet")
       val keys = shiftCols(name)

@@ -52,7 +52,7 @@ object SessionTuning {
   }
 
   /** The one session set-up of the runner mains (Verify, PlanAudit,
-    * ExplainDump): `local[$SPARK_GRAFT_CPUS]` (default: all cores),
+    * ExplainDump, ScaleUp): `local[$SPARK_GRAFT_CPUS]` (default: all cores),
     * [[shufflePartitions]] for `sfDir`, UTC, [[GraftExtensions]], UI
     * off, WARN logging. `extraConf` is applied last, so a main can
     * override any of these (PlanAudit turns AQE off). */

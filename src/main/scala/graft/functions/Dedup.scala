@@ -15,8 +15,8 @@ import TextOps._
   *    expensive Jaccard verify runs only on bucket-collision candidates.
   *  - SimHash: 60-bit fingerprint per doc from one explode+groupBy
   *    (map-side combined); near-dup pairs again found via band buckets.
-  * All hashing uses the oracle-portable hash60; swap in xxhash64 for
-  * production throughput (see Hashing scaladoc).
+  * All hashing uses the oracle-portable hash60, fixed for oracle parity
+  * (see Hashing scaladoc).
   */
 object Dedup {
 

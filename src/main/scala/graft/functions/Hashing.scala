@@ -12,10 +12,9 @@ import org.apache.spark.sql.functions._
   *   DuckDB: ('0x' || substr(md5(x),1,15))::BIGINT
   * 15 hex digits = 60 bits, always non-negative, fits a signed 64-bit.
   *
-  * Perf note: md5 is ~3× slower than xxhash64. The operators take the
-  * hash as a parameter so production runs can swap in `xxhash64` (same
-  * distribution properties) — the oracle-parity hash is the test
-  * configuration, not a design constraint.
+  * Perf note: md5 is ~3× slower than xxhash64. No operator takes the
+  * hash as a parameter: hash60 is fixed so every sketch operator stays
+  * bit-identical to the DuckDB oracle.
   */
 object Hashing {
   /** 60-bit portable hash of a string column — the native codegen

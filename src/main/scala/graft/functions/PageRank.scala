@@ -33,11 +33,11 @@ object PageRank {
   /** Personalized PageRank: teleport mass restarts ONLY at the seed
     * set (isSeed over the node id column) — rank becomes "relevance to
     * these seeds", the recommender / related-items primitive, instead
-    * of global authority. Same integer fixed-point discipline as
-    * [[ranks]]; identical per-iteration plan. Non-seed nodes start at
-    * 0 and receive mass only through edges. NOT a pure plan builder:
-    * it runs one eager count() action (the seed count becomes a
-    * literal) and throws if the seed predicate matches no node. */
+    * of global authority; [[ranks]] is this with every node a seed.
+    * Non-seed nodes start at 0 and receive mass only through edges.
+    * NOT a pure plan builder: it runs one eager count() action (the
+    * seed count becomes a literal) and throws if the seed predicate
+    * matches no node. */
   def personalizedRanks(edges: DataFrame, isSeed: Column,
       iters: Int = 2, scale: Long = 1000000000000L): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct()
@@ -68,28 +68,11 @@ object PageRank {
     r.select(col("id"), col("rank"))
   }
 
-  /** @param edges directed (src, dst), duplicates allowed (distinct'd).
+  /** Global PageRank: personalized PageRank with every node a seed
+    * (teleport base, initial rank and update all divide by N).
+    * @param edges directed (src, dst), duplicates allowed (distinct'd).
     * @return (id, rank) — rank in integer micro-units of `scale`. */
   def ranks(edges: DataFrame, iters: Int = 2,
-      scale: Long = 1000000000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ed = e.join(deg, "src").trunkCheckpoint()
-    val nodes = ed.select(col("src").as("id"))
-      .unionByName(ed.select(col("dst").as("id")))
-      .distinct().trunkCheckpoint()
-    val n = nodes.count()
-    val base = (15L * scale / 100L) / n
-    var r = nodes.select(col("id"), lit(scale / n).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = ed.join(r, ed("src") === r("id"))
-        .select(col("dst").as("id"),
-          expr("rank div outdeg").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("s"))
-      r = nodes.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + expr("85 * coalesce(s, 0L) div 100")).as("rank"))
-    }
-    r
-  }
+      scale: Long = 1000000000000L): DataFrame =
+    personalizedRanks(edges, lit(true), iters, scale)
 }

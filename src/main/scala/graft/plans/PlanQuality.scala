@@ -20,9 +20,9 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   * set by the QUERY, not the corpus: an aggregate (stats scalars,
   * codebooks, bounded-key groups), a limit (top-k), a literal-bounded
   * filter (point lookup / `id < k` seed set / IN list), a small
-  * literal or Range grid, or a checkpointed reduced trunk
-  * ([[graft.CheckpointHygiene]] pins only day-grid / two-branch
-  * range-window frames, never raw corpus rows).
+  * literal or Range grid, or a checkpointed reduced trunk (session
+  * trunks live in [[graft.Materialize.trunk]]; see the RDD-scan case
+  * below for why a checkpointed build side is accepted).
   */
 object PlanQuality {
 

@@ -1,16 +1,14 @@
 package graft.plans
 
-import org.apache.spark.SparkException
-import org.apache.spark.internal.Logging
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
 import org.apache.spark.sql.catalyst.plans.logical._
 
-/** Runtime fence for the plan shapes that are correct at test SF and
-  * cliffs at 100 TB — the suite-wide PlanSpec guard, shipped as an
-  * engine feature so EVERY session (not just our test suite) gets it.
+/** Classifier for the plan shapes that are correct at test SF and
+  * cliffs at 100 TB. PlanSpec's suite-wide sweep runs it over every
+  * registry query's analyzed plan and subtracts the query's
+  * [[PlanContracts]] allowances; it is not a session rule.
   *
-  * Classes checked (each independently allowable):
+  * Classes reported:
   *   - `globalWindow`    — a window function with an empty PARTITION BY:
   *     Spark moves the whole input to ONE task ("No Partition Defined").
   *     Fix: partition the window, or use ScaleWindows.rangeCumSum /
@@ -23,22 +21,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
   *   - `singlePartition` — an explicit repartition(1)/coalesce(1):
   *     funnels the frame through one task. Exempt when the input is
   *     provably ≤1 row.
-  *
-  * Modes (session conf, settable at runtime):
-  *   `spark.graft.scaleGuard.mode`  = off (default) | warn | strict
-  *   `spark.graft.scaleGuard.allow` = comma list of class names to
-  *     exempt, e.g. "globalWindow,singlePartition" (for declared
-  *     small-frame plans — top-k lists, per-day series, percentile
-  *     grids — the same whitelist discipline PlanSpec documents).
-  *
-  * warn logs one line per offending query; strict fails analysis with
-  * the offending classes named. Default off: the guard is opt-in
-  * because bounded-frame global windows are legitimate (and common)
-  * when the input is structurally small — only the author knows.
   */
-object ScaleGuard extends Logging {
-  val ModeKey = "spark.graft.scaleGuard.mode"
-  val AllowKey = "spark.graft.scaleGuard.allow"
+object ScaleGuard {
 
   /** True when the subtree is provably at most one row, or the author
     * declared it broadcast-small via a hint. */
@@ -72,23 +56,5 @@ object ScaleGuard extends Logging {
       case _ => ()
     }
     found.toSeq
-  }
-
-  def check(session: SparkSession)(plan: LogicalPlan): Unit = {
-    val mode = session.conf.get(ModeKey, "off")
-    if (mode != "off") {
-      val allowed = session.conf.get(AllowKey, "")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSet
-      val hits = findings(plan).filterNot(allowed)
-      if (hits.nonEmpty) {
-        val msg = s"ScaleGuard: plan contains ${hits.mkString(", ")} — " +
-          "single-task cliff at scale. Partition the window (or use " +
-          "graft ScaleWindows), add an equi-predicate or broadcast() " +
-          "the provably-small side, or allow the class via " +
-          s"$AllowKey if the frame is structurally bounded."
-        if (mode == "strict") throw new SparkException(msg)
-        else logWarning(msg)
-      }
-    }
   }
 }

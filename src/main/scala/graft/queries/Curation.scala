@@ -955,22 +955,24 @@ object Curation {
     * carries no shareable block and is out of scope by construction. */
   /** Probe-side join of a corpus-sized gram/block table against the
     * duplicated-set S (the ≥2-doc heavy tail). S is template chrome —
-    * normally tiny — so it BROADCASTS when it fits the configured cap
-    * (`graft.scrub.maxBroadcastRows`, default 5M rows of 8-byte
-    * hashes); on a boilerplate-heavy crawl where S outgrows the
-    * broadcast budget the probe degrades to a shuffled hash join on
-    * the hash key — same rows out, one extra corpus shuffle, no
-    * driver/executor OOM. S is localCheckpoint'd first so the
-    * branch's count() never re-runs the corpus aggregation that built
-    * it (and the join reuses the materialized blocks). Both branches
-    * are spec-asserted result-equal with the cap toggled. */
+    * normally tiny — so it BROADCASTS when its 8-byte hashes fit
+    * Spark's own `spark.sql.autoBroadcastJoinThreshold` (count × 8
+    * bytes ≤ threshold; a threshold ≤ 0 never broadcasts); on a
+    * boilerplate-heavy crawl where S outgrows the broadcast budget the
+    * probe degrades to a shuffled hash join on the hash key — same rows
+    * out, one extra corpus shuffle, no driver/executor OOM. S is
+    * localCheckpoint'd first so the branch's count() never re-runs the
+    * corpus aggregation that built it (and the join reuses the
+    * materialized blocks). Both branches are spec-asserted result-equal
+    * with the threshold toggled. */
   private def dupSetJoin(grams: DataFrame, dupSet: DataFrame,
       cond: org.apache.spark.sql.Column, joinType: String): DataFrame = {
-    val spark = grams.sparkSession
-    val cap = spark.conf.get("graft.scrub.maxBroadcastRows",
-      "5000000").toLong
+    val threshold = grams.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
     val s = dupSet.trunkCheckpoint()
-    if (s.count() <= cap) grams.join(broadcast(s), cond, joinType)
+    if (threshold > 0 && s.count() * 8L <= threshold)
+      grams.join(broadcast(s), cond, joinType)
     else grams.join(s.hint("shuffle_hash"), cond, joinType)
   }
 

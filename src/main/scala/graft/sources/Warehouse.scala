@@ -244,17 +244,15 @@ object Warehouse {
     * is a no-op when a committed version ≥ `version` exists, and an
     * uncommitted leftover of a crashed attempt is overwritten. `next`
     * builds the snapshot from the latest committed one (None on the
-    * first write); returns whether this call wrote. The single-writer
-    * form of a Delta/Iceberg log — multi-writer atomicity needs a log
-    * with compare-and-swap, not a listing. */
+    * first write). The single-writer form of a Delta/Iceberg log —
+    * multi-writer atomicity needs a log with compare-and-swap, not a
+    * listing. */
   def writeSnapshot(spark: SparkSession, path: String, version: Long)(
-      next: Option[DataFrame] => DataFrame): Boolean = {
+      next: Option[DataFrame] => DataFrame): Unit = {
     val latest = snapshotVersions(spark, path).lastOption
-    val write = !latest.exists(_ >= version)
-    if (write)
+    if (!latest.exists(_ >= version))
       next(latest.map(v => readSnapshot(spark, path, Some(v))))
         .write.mode(SaveMode.Overwrite).parquet(s"$path/v=$version")
-    write
   }
 
   def readSnapshot(spark: SparkSession, path: String,

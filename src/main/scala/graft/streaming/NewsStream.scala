@@ -211,10 +211,11 @@ object NewsStream {
     * 3-hourly DAG, done as merge-on-write instead of full recompute):
     * batch `b` MERGEs its transformed rows into the latest committed
     * mart (new values win, `n_versions` sums) and commits snapshot
-    * `v=b+1`, then deletes the superseded versions. A replayed batch
-    * writes nothing, and a crash mid-write leaves the last version
-    * readable. At scale a Delta/Iceberg MERGE INTO replaces the
-    * listing-based commit; the rewrite granularity differs. */
+    * `v=b+1`, then deletes the superseded versions. An empty batch (the
+    * dedup watermark's no-data batches) and a replayed batch write
+    * nothing, and a crash mid-write leaves the last version readable.
+    * At scale a Delta/Iceberg MERGE INTO replaces the listing-based
+    * commit; the rewrite granularity differs. */
   def incrementalArticlesMart(deduped: DataFrame, warehouseDir: String,
       checkpointDir: String, loadTs: String): DataStreamWriter[Row] = {
     import graft.news.NewsTransform
@@ -222,18 +223,22 @@ object NewsStream {
     deduped.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val wrote = Warehouse.writeSnapshot(spark, martPath, batchId + 1) {
-          prior =>
-            val newRows = NewsTransform.articlesMart(
-              NewsTransform.transformed(batch.drop("article_key"), loadTs))
-            prior.fold(newRows)(Warehouse.mergeUpsert(_,
-              newRows.withColumn("is_delete", lit(false)), "ARTICLE_ID",
-              sumCols = Seq("n_versions")))
-        }
-        // a replay still drains the batch: the ingest dedup's state
-        // stores commit only when every partition runs
-        if (!wrote) batch.write.format("noop").mode("overwrite").save()
-        Warehouse.dropSupersededSnapshots(spark, martPath)
+        // the emptiness probe runs every partition once, which the
+        // ingest dedup's state stores need to commit; the merge then
+        // reads the cached rows
+        val rows = batch.persist()
+        try {
+          if (rows.count() > 0) {
+            Warehouse.writeSnapshot(spark, martPath, batchId + 1) { prior =>
+              val newRows = NewsTransform.articlesMart(
+                NewsTransform.transformed(rows.drop("article_key"), loadTs))
+              prior.fold(newRows)(Warehouse.mergeUpsert(_,
+                newRows.withColumn("is_delete", lit(false)), "ARTICLE_ID",
+                sumCols = Seq("n_versions")))
+            }
+            Warehouse.dropSupersededSnapshots(spark, martPath)
+          }
+        } finally rows.unpersist()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

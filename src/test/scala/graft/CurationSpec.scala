@@ -286,18 +286,19 @@ class CurationSpec extends SparkSpec {
       val df = Curation.queries(q)(spark, sfDir)
       (df.orderBy($"doc_id").collect(), df.queryExecution.executedPlan.toString)
     }
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(threshold)
     for (q <- Seq("q88_boilerplate_scrub", "q102_dup_spans")) {
-      spark.conf.unset("graft.scrub.maxBroadcastRows")
       val (bRows, bPlan) = plans(q)
       assert(bPlan.contains("BroadcastHashJoin"),
         s"$q default path should broadcast the dup set")
-      spark.conf.set("graft.scrub.maxBroadcastRows", "0")
+      spark.conf.set(threshold, "-1")
       try {
         val (sRows, sPlan) = plans(q)
         assert(sPlan.contains("ShuffledHashJoin"),
           s"$q overflow path should shuffle the probe:\n$sPlan")
         assert(sRows === bRows, s"$q rows diverged across join branches")
-      } finally spark.conf.unset("graft.scrub.maxBroadcastRows")
+      } finally spark.conf.set(threshold, prev)
     }
   }
 

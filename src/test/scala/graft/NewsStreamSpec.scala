@@ -176,9 +176,11 @@ class NewsStreamSpec extends SparkSpec {
       s"cumulative versions should sum to 2, got ${t9.getLong(0)}")
     assert(t9.getString(1).contains("CHANGED"),
       "latest re-ingest's content must win")
-    // superseded versions are deleted: one committed version remains
+    // superseded versions are deleted: one committed version remains,
+    // the changed T9's; the no-data batches after it commit nothing
     val versions = Warehouse.snapshotVersions(spark, mart)
-    assert(versions.size == 1, s"expected one mart version, got $versions")
+    assert(versions == Seq(t9Batch + 1),
+      s"expected only the T9 batch's version ${t9Batch + 1}, got $versions")
 
     // crash after the changed T9's mart commit, before its checkpoint
     // commit: the restart replays that batch, which must not merge twice

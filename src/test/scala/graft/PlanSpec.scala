@@ -232,9 +232,35 @@ class PlanSpec extends SparkSpec {
       "q173 must broadcast supports and keep the pair join equi")
   }
 
+  /** What the two suite-wide tests assert on, per registry query. */
+  private case class Swept(globalWindows: Int, unreducedBnljs: Int,
+      cartesians: Int, guard: Seq[String])
+
+  /** The one registry build behind both suite-wide tests: each query is
+    * built once with AQE off (AQE wraps the plan in
+    * AdaptiveSparkPlanExec, hiding join nodes until execution — plan
+    * statically) and reduced to the global windows of its optimized
+    * plan, the nested-loop shapes of its executed plan and the
+    * ScaleGuard findings of its analyzed plan. */
+  private lazy val sweep: Seq[(String, Swept)] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    import graft.plans.{PlanQuality, ScaleGuard}
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val qe = fn(spark, sfDir).queryExecution
+      val p = qe.executedPlan
+      name -> Swept(
+        qe.optimizedPlan.collect {
+          case w: LWindow if w.partitionSpec.isEmpty => w
+        }.size,
+        PlanQuality.unreducedBnljs(p), PlanQuality.cartesians(p),
+        ScaleGuard.findings(qe.analyzed))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("suite-wide: unpartitioned windows only on the documented " +
     "small-frame whitelist") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     // Every entry here is a deliberate global window over a frame that
     // is orders of magnitude below corpus row count by construction:
     // ANN rank frames are candidate/top-k sized (WindowGroupLimit
@@ -243,17 +269,13 @@ class PlanSpec extends SparkSpec {
     // Zipf-collapsed vocabulary, q207/q216 on retrieval top-k lists.
     // A NEW query showing up in this set is a scale regression: fix it
     // (rangeCumSum/rangeNtile/rangeCumMax) or justify it here.
-    // single source of truth shared with the ScaleGuard sweep below
+    // single source of truth shared with the ScaleGuard check below
     // (graft.plans.PlanContracts documents each grant)
     val whitelist = graft.plans.PlanContracts.allowances.collect {
       case (name, classes) if classes("globalWindow") => name
     }.toSet
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val n = fn(spark, sfDir).queryExecution.optimizedPlan.collect {
-          case w: LWindow if w.partitionSpec.isEmpty => w
-        }.size
-        if (n > 0) Some(name) else None
+    val offenders = sweep.collect {
+      case (name, s) if s.globalWindows > 0 => name
     }.toSet
     val unexpected = offenders -- whitelist
     assert(unexpected.isEmpty,
@@ -271,39 +293,27 @@ class PlanSpec extends SparkSpec {
     // classification shared with the committed PLAN_AUDIT.md table.
     // Cartesian whitelist: q177's Theil-Sen pair expansion runs on the
     // per-day aggregate (O(days)^2, calendar-bounded). Shared with the
-    // ScaleGuard sweep via PlanContracts. That sweep checks every
+    // ScaleGuard check via PlanContracts. That check reads every
     // query's ANALYZED plan for the cliff classes (global window,
     // non-equi cross join, single-partition repartition) minus the
     // query's declared allowances.
     val cartesianOk = graft.plans.PlanContracts.allowances.collect {
       case (name, classes) if classes("crossJoin") => name
     }.toSet
-    // AQE wraps the plan in AdaptiveSparkPlanExec, hiding join nodes
-    // until execution — plan statically for the sweep
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          val df = fn(spark, sfDir)
-          val p = df.queryExecution.executedPlan
-          val bad = graft.plans.PlanQuality.unreducedBnljs(p)
-          val carts = graft.plans.PlanQuality.cartesians(p)
-          val guard = graft.plans.ScaleGuard
-            .findings(df.queryExecution.analyzed)
-            .filterNot(graft.plans.PlanContracts.allowances
-              .getOrElse(name, Set.empty[String]))
-          if (bad > 0) Some(s"$name: $bad unreduced BNLJ")
-          else if (carts > 0 && !cartesianOk(name))
-            Some(s"$name: $carts cartesian")
-          else if (guard.nonEmpty)
-            Some(s"$name: ScaleGuard ${guard.mkString(",")}")
-          else None
-      }
-      assert(offenders.isEmpty,
-        s"corpus-shaped nested loops or ScaleGuard findings " +
-          s"(OOM cliff at 100 TB): $offenders")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    val offenders = sweep.flatMap { case (name, s) =>
+      val guard = s.guard.filterNot(graft.plans.PlanContracts.allowances
+        .getOrElse(name, Set.empty[String]))
+      if (s.unreducedBnljs > 0)
+        Some(s"$name: ${s.unreducedBnljs} unreduced BNLJ")
+      else if (s.cartesians > 0 && !cartesianOk(name))
+        Some(s"$name: ${s.cartesians} cartesian")
+      else if (guard.nonEmpty)
+        Some(s"$name: ScaleGuard ${guard.mkString(",")}")
+      else None
+    }
+    assert(offenders.isEmpty,
+      s"corpus-shaped nested loops or ScaleGuard findings " +
+        s"(OOM cliff at 100 TB): $offenders")
   }
 
   test("q119 pareto front: partition-carry deployed, no global window") {

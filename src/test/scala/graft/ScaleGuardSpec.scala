@@ -5,9 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.ScaleGuard
 
-/** The runtime scale fence: the PlanSpec cliff classes (unpartitioned
-  * window, unconditioned join, forced single partition) enforced by a
-  * session check rule for every query, not just registry queries.
+/** The scale-cliff classifier behind PlanSpec's registry sweep: the
+  * classes (unpartitioned window, unconditioned join, forced single
+  * partition) and their declared-small exemptions, read off analyzed
+  * plans.
   */
 class ScaleGuardSpec extends SparkSpec {
   import spark.implicits._
@@ -15,83 +16,47 @@ class ScaleGuardSpec extends SparkSpec {
   private def base: DataFrame =
     spark.range(100).select($"id", ($"id" % 7).as("k"))
 
-  private def withMode[A](mode: String, allow: String = "")(f: => A): A = {
-    spark.conf.set(ScaleGuard.ModeKey, mode)
-    spark.conf.set(ScaleGuard.AllowKey, allow)
-    try f finally {
-      spark.conf.set(ScaleGuard.ModeKey, "off")
-      spark.conf.set(ScaleGuard.AllowKey, "")
-    }
+  private def findings(df: DataFrame): Seq[String] =
+    ScaleGuard.findings(df.queryExecution.analyzed)
+
+  test("no session rule: a global window and coalesce(1) analyze and run") {
+    assert(base.withColumn("rn", row_number().over(Window.orderBy($"id")))
+      .coalesce(1).count() == 100)
   }
 
-  test("off by default: a global window analyzes and runs") {
-    val n = base
-      .withColumn("rn", row_number().over(Window.orderBy($"id")))
-      .count()
-    assert(n == 100)
+  test("findings: a global window gives globalWindow") {
+    assert(findings(base.withColumn("rn",
+      row_number().over(Window.orderBy($"id")))) == Seq("globalWindow"))
   }
 
-  test("strict: global window fails analysis, named in the message") {
-    withMode("strict") {
-      val e = intercept[Exception] {
-        base.withColumn("rn", row_number().over(Window.orderBy($"id")))
-          .collect()
-      }
-      assert(e.getMessage.contains("globalWindow"))
-    }
+  test("findings: a partitioned window and rangeCumSum give nothing") {
+    assert(findings(base.withColumn("rn",
+      row_number().over(Window.partitionBy($"k").orderBy($"id")))).isEmpty)
+    assert(findings(graft.functions.ScaleWindows
+      .rangeCumSum(base, Seq($"id"), lit(1L), "c")).isEmpty)
   }
 
-  test("strict: partitioned window and rangeCumSum pass") {
-    withMode("strict") {
-      val n1 = base.withColumn("rn",
-        row_number().over(Window.partitionBy($"k").orderBy($"id")))
-        .count()
-      assert(n1 == 100)
-      val n2 = graft.functions.ScaleWindows
-        .rangeCumSum(base, Seq($"id"), lit(1L), "c")
-        .count()
-      assert(n2 == 100)
-    }
+  test("findings: a cross join of two large frames gives crossJoin") {
+    assert(findings(base.crossJoin(base.select($"id".as("id2")))) ==
+      Seq("crossJoin"))
   }
 
-  test("strict: unconditioned join of two big frames fails; " +
-    "one-row and broadcast-hinted sides are exempt") {
-    withMode("strict") {
-      val e = intercept[Exception] {
-        base.crossJoin(base.select($"id".as("id2"))).count()
-      }
-      assert(e.getMessage.contains("crossJoin"))
-      // global aggregate: maxRows == 1, the scalar-broadcast contract
-      val tot = base.agg(sum($"id").as("s"))
-      assert(base.crossJoin(broadcast(tot)).count() == 100)
-      // bare one-row aggregate without the hint is exempt too
-      assert(base.crossJoin(tot).count() == 100)
-      // declared-small via broadcast() hint
-      val dim = base.filter($"k" === 1).select($"id".as("id3"))
-      assert(base.crossJoin(broadcast(dim)).count() > 0)
-      // equi-join passes untouched
-      assert(base.join(base.select($"id".as("id4"), $"k".as("k2")),
-        $"id" === $"id4").count() == 100)
-    }
+  test("findings: one-row, broadcast-hinted and equi-joined sides " +
+    "give no crossJoin") {
+    // global aggregate: maxRows == 1, the scalar-broadcast contract,
+    // with and without the hint
+    val tot = base.agg(sum($"id").as("s"))
+    assert(findings(base.crossJoin(broadcast(tot))).isEmpty)
+    assert(findings(base.crossJoin(tot)).isEmpty)
+    // declared-small via broadcast() hint
+    val dim = base.filter($"k" === 1).select($"id".as("id3"))
+    assert(findings(base.crossJoin(broadcast(dim))).isEmpty)
+    assert(findings(base.join(base.select($"id".as("id4"), $"k".as("k2")),
+      $"id" === $"id4")).isEmpty)
   }
 
-  test("strict: repartition(1) fails; allowed via the allow list") {
-    withMode("strict") {
-      val e = intercept[Exception] { base.coalesce(1).count() }
-      assert(e.getMessage.contains("singlePartition"))
-    }
-    withMode("strict", allow = "singlePartition") {
-      assert(base.coalesce(1).count() == 100)
-    }
-  }
-
-  test("warn: offending plan runs (log-only)") {
-    withMode("warn") {
-      val n = base
-        .withColumn("rn", row_number().over(Window.orderBy($"id")))
-        .count()
-      assert(n == 100)
-    }
+  test("findings: coalesce(1) gives singlePartition") {
+    assert(findings(base.coalesce(1)) == Seq("singlePartition"))
   }
 
   test("findings: classes reported once each, stable order") {
