@@ -64,7 +64,7 @@ case class CmsSketchAgg(
           case s: UTF8String => s.getBytes
           case b: Array[Byte] => b
         }
-        val h31 = Hash60Util.hash60(bytes) & CmsSketchAgg.Mask31
+        val h31 = Hash60Util.hash60(bytes) & MinHashLanes.Mask31
         var l = 0
         while (l < Lanes) {
           buf(l * W + CmsSketchAgg.bucket(h31, l)) += wv
@@ -106,18 +106,9 @@ case class CmsSketchAgg(
 object CmsSketchAgg {
   val Lanes = 4
   val W = 64
-  val Mask31 = 2147483647L
-  private val LaneP = 2147483647L
 
-  /** Same affine lane family as functions.Hashing (kept in lockstep —
-    * parity is oracle-gated through q61); constants precomputed once. */
-  private val laneA: Array[Long] = Array.tabulate(Lanes) { l =>
-    val x = Hash60Util.hash60(s"minhash-laneA|$l".getBytes("UTF-8")) % LaneP
-    if (x == 0) 1L else x
-  }
-  private val laneB: Array[Long] = Array.tabulate(Lanes)(l =>
-    Hash60Util.hash60(s"minhash-laneB|$l".getBytes("UTF-8")) % LaneP)
-
-  def bucket(h31: Long, l: Int): Int =
-    ((laneA(l) * h31 + laneB(l)) % LaneP % W).toInt
+  /** Lane l of [[MinHashLanes]] (the table functions.Hashing reads too,
+    * so parity with the compositional form is by construction; q61
+    * oracle-gates it) reduced to a bucket. */
+  def bucket(h31: Long, l: Int): Int = (MinHashLanes.lane(h31, l) % W).toInt
 }

@@ -2,21 +2,30 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import Hashing._
-import TextOps._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import graft.expressions.{LshBandHashes, MinHashSig, SimHashFp}
 
 /** Deduplication operators for large-scale corpus curation.
   *
   * Scale design (the point of each algorithm):
   *  - exact: one groupBy on a content hash — single shuffle keyed by the
   *    hash, perfectly parallel, no skew (md5 is uniform).
-  *  - MinHash+LSH: candidate generation is a self-join on (band, bandHash)
-  *    buckets — cost O(docs × bands) rows, never the O(n²) all-pairs. The
+  *  - MinHash+LSH: the signature and its band hashes are per-row
+  *    expressions over the document's shingle set (no shuffle);
+  *    candidate generation is a self-join on (band, bandHash) buckets —
+  *    cost O(docs × bands) rows, never the O(n²) all-pairs. The
   *    expensive Jaccard verify runs only on bucket-collision candidates.
-  *  - SimHash: 60-bit fingerprint per doc from one explode+groupBy
-  *    (map-side combined); near-dup pairs again found via band buckets.
-  * All hashing uses the oracle-portable hash60, fixed for oracle parity
-  * (see Hashing scaladoc).
+  *  - SimHash: a 60-bit fingerprint per document, one per-row
+  *    expression over its tokens (no shuffle); near-dup pairs are again
+  *    found via band buckets.
+  * The sketches take ONE ROW PER DOCUMENT: each row's array is the
+  * whole document, so a doc_id on two rows gets two sketches (the
+  * former explode + groupBy formulation merged them). Every caller
+  * passes unique ids; no runtime check enforces it, as that would be
+  * the shuffle the per-row form removes. All hashing uses the
+  * oracle-portable hash60, fixed for oracle parity (see Hashing
+  * scaladoc).
   */
 object Dedup {
 
@@ -28,42 +37,31 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_doc_id"),
         count(lit(1)).as("n_copies"))
 
-  /** MinHash signature columns h0..h{k-1} from an already-materialized
-    * shingle-set column: per doc, min over shingles of lane_i(shingle).
-    * One md5 per shingle then k affine lanes (see Hashing.lane) — one
-    * explode + one groupBy with k min-aggregates; partial aggregation
-    * keeps the shuffle tiny (k longs per doc). Taking the sets, not the
-    * text, lets callers that also need them (Jaccard verify) share one
-    * tokenize+shingle pass instead of re-deriving per consumer (q99:
-    * the naive composition shingles each corpus side twice). Only pass
-    * a MATERIALIZED (checkpointed) column: exploding a live projected
-    * array expression re-inlines it below the repartition
-    * (InferFiltersFromGenerate — see the q58 note in BASELINE.md). */
+  /** MinHash signature columns h0..h{k-1} (k ≤ 64) from a shingle-set
+    * column, one input row per doc: h_i = min over the set of
+    * lane_i(hash60(shingle) & 2^31-1) (see Hashing.lane), computed by
+    * the per-row [[graft.expressions.MinHashSig]]. Docs with an empty or
+    * NULL set get no row. Taking the sets, not the text, lets callers
+    * that also need them (Jaccard verify) share one tokenize+shingle
+    * pass (q99: the naive composition shingles each corpus side twice). */
   def minhashFromShingleSets(df: DataFrame, idCol: String,
       shCol: String, numHashes: Int): DataFrame = {
-    val exploded = df
-      .select(col(idCol).as("doc_id"), explode(col(shCol)).as("sh"))
-      .select(col("doc_id"),
-        hash60(col("sh")).bitwiseAND(lit(Mask31)).as("h31"))
-    val aggs = (0 until numHashes)
-      .map(i => min(lane(col("h31"), i)).as(s"h$i"))
-    exploded.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+    val sig = ColumnBridge.column(
+      MinHashSig(ColumnBridge.expression(col(shCol)), numHashes))
+    df.select(col(idCol).as("doc_id"),
+        ifNonEmpty(col(shCol), sig).as("sig"))
+      .select(col("doc_id") +:
+        (0 until numHashes).map(i => col("sig").getItem(i).as(s"h$i")): _*)
   }
 
-  /** LSH banding: signature → (band, bandHash) rows. Docs sharing any
-    * band bucket become candidate pairs. */
+  /** LSH banding: signature → (band, bandHash) rows, band b hashing
+    * lanes b*r..b*r+r-1 (r = rowsPerBand) as hash60 of their
+    * comma-joined decimals ([[graft.expressions.LshBandHashes]]). Docs
+    * sharing any band bucket become candidate pairs. */
   def lshBands(sigs: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    val bandStructs = (0 until numBands).map { b =>
-      val parts = (0 until rowsPerBand)
-        .map(j => col(s"h${b * rowsPerBand + j}").cast("string"))
-      struct(lit(b).as("band"),
-        hash60(concat_ws(",", parts: _*)).as("band_hash"))
-    }
-    sigs.select(col("doc_id"),
-        explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"),
-        col("bb.band_hash").as("band_hash"))
+    val bands = ColumnBridge.column(LshBandHashes(ColumnBridge.expression(
+      array((0 until numHashes).map(i => col(s"h$i")): _*)), rowsPerBand))
+    sigs.select(col("doc_id"), posexplode(bands).as(Seq("band", "band_hash")))
   }
 
   /** Candidate pairs from shared LSH buckets (doc_a < doc_b). */
@@ -85,33 +83,27 @@ object Dedup {
     inter / union
   }
 
-  /** SimHash fingerprint: bit b of the 60-bit fingerprint is set iff the
-    * (+1/-1) vote sum of token-hash bit b over all tokens (with
-    * multiplicity) is positive. */
+  /** SimHash fingerprint per doc (one input row per doc): bit b of the
+    * `bits`-bit fingerprint is set iff the (+1/-1) vote sum of
+    * token-hash bit b over all tokens (with multiplicity) is positive —
+    * the per-row [[graft.expressions.SimHashFp]], one md5 per distinct
+    * token. Docs without a token (NULL or letterless text) get no row. */
   def simhash(df: DataFrame, idCol: String, textCol: String,
       bits: Int = 60): DataFrame = {
-    // pre-aggregate token multiplicity per (doc, distinct word): Zipf
-    // corpora collapse hard here, so the md5 and the `bits` vote
-    // aggregates run per distinct word, with counts as vote weights —
-    // identical vote sums, ~3× fewer hash+vote evaluations. Map-side
-    // combine keeps the extra exchange smaller than the explode it
-    // replaces as shuffle input.
-    val counted = df.select(col(idCol).as("doc_id"),
-        explode(tokens(col(textCol))).as("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("th", hash60(col("tok")))
-    val voteAggs = (0 until bits).map { b =>
-      sum(when(shiftright(col("th"), b).bitwiseAND(1) === 1, col("cnt"))
-        .otherwise(-col("cnt"))).as(s"v$b")
-    }
-    val votes = counted.groupBy(col("doc_id"))
-      .agg(voteAggs.head, voteAggs.tail: _*)
-    val fp = (0 until bits)
-      .map(b => when(col(s"v$b") > 0, lit(1L << b)).otherwise(0L))
-      .reduce(_ + _)
-    votes.select(col("doc_id"), fp.as("simhash"))
+    val fp = ColumnBridge.column(
+      SimHashFp(ColumnBridge.expression(col("toks")), bits))
+    df.select(col(idCol).as("doc_id"),
+        TextOps.tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), ifNonEmpty(col("toks"), fp).as("simhash"))
   }
+
+  /** Generator: one row holding `v` where array `arr` is non-empty, no
+    * row where it is empty or NULL (exploding a NULL array). Not a
+    * Filter: the optimizer pushes a Filter below the projection that
+    * computes `arr` (below a read's repartition, too), so a projected
+    * array expression would run twice, the first time unparallelized. */
+  private def ifNonEmpty(arr: Column, v: Column): Column =
+    explode(when(size(arr) > 0, array(v)))
 
   /** Hamming distance between two simhash fingerprints. */
   def hamming(a: Column, b: Column): Column =

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.expressions.MinHashLanes
+
 /** Cross-engine deterministic hashing.
   *
   * `xxhash64`/`hash` are Spark-private algorithms; to make sketch-based
@@ -55,20 +57,16 @@ object Hashing {
     * h_i(x) = (a_i * (h(x) & 0x7FFFFFFF) + b_i) mod p, p = 2^31 - 1.
     * One md5 per element, k multiply-adds — the production-rate version
     * of k independent hashes (64× fewer md5 calls), still portable:
-    * products stay under 2^62 so neither engine overflows. */
-  val LaneP = 2147483647L // 2^31 - 1
-  val Mask31 = 2147483647L
+    * products stay under 2^62 so neither engine overflows. The
+    * constants are tabulated once in [[graft.expressions.MinHashLanes]]
+    * (lanes 0..63). */
+  val LaneP: Long = MinHashLanes.P
+  val Mask31: Long = MinHashLanes.Mask31
 
-  // md5-derived lane constants: an LCG progression here produces
-  // linearly-correlated lanes, which measurably degrades banded-LSH
-  // recall (observed: a J≥0.8 twin missed at P≈2e-4 odds)
-  def laneA(i: Int): Long = {
-    val a = hash60(s"minhash-laneA|$i") % LaneP
-    if (a == 0) 1L else a
-  }
-  def laneB(i: Int): Long = hash60(s"minhash-laneB|$i") % LaneP
+  def laneA(i: Int): Long = MinHashLanes.A(i)
+  def laneB(i: Int): Long = MinHashLanes.B(i)
 
-  def lane(h31: org.apache.spark.sql.Column, i: Int): org.apache.spark.sql.Column =
+  def lane(h31: Column, i: Int): Column =
     (lit(laneA(i)) * h31 + lit(laneB(i))) % lit(LaneP)
 
   def sqlLane(h31Expr: String, i: Int): String =

@@ -138,7 +138,7 @@ object Curation {
     Seq("join", "hash", "row", "spark", "query", "window", "scan", "dup")
   private def jvmCmsBucket(word: String, l: Int): Long = {
     val h31 = Hashing.hash60(word) & Hashing.Mask31
-    (Hashing.laneA(l) * h31 + Hashing.laneB(l)) % Hashing.LaneP % CmsW
+    graft.expressions.MinHashLanes.lane(h31, l) % CmsW
   }
   val cmsHeavyHitters: Q = (s, dir) => {
     import s.implicits._

@@ -3251,7 +3251,8 @@ object TrainingData {
        |WHERE o.doc_id < $TwinOffset""".stripMargin
   }
 
-  private val sqlCos = sqlCosCols("embedding", "qv")
+  // a def: sqlSqRecall, initialized earlier in this object, reads it
+  private def sqlCos: String = sqlCosCols("embedding", "qv")
 
   private def sqlBucket: String = {
     val w = Similarity.sqlPlaneWeights(NumPlanes, Dims)

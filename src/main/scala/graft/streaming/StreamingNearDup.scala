@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.{ListState, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
-import graft.functions.Hashing
+import graft.expressions.{LshBandHashes, MinHashSig}
 
 /** Continuous MinHash+LSH near-dup detection AT INGEST — the
   * streaming form of the q23/q67 batch chain: every arriving document
@@ -14,7 +15,7 @@ import graft.functions.Hashing
   *
   * Plan shape: per-ROW minhash signature (no stateful aggregation —
   * the signature is a pure function of the document's shingle set,
-  * computed with array higher-order functions), explode to the 16
+  * the batch chain's own per-row expression), explode to the 16
   * (band, bandHash) bucket rows, then `transformWithState` keyed by
   * bucket. State per bucket is the member doc-id list; a new arrival
   * emits one candidate pair per existing member and appends itself.
@@ -48,40 +49,26 @@ object StreamingNearDup {
     * (they still PAIR against retained members on arrival). */
   val MaxBucket = 256
 
-  /** Per-row minhash signature lanes — identical arithmetic to
-    * `Dedup.minhashFromShingleSets` (hash60 & 31-bit mask, lane mix,
-    * min per lane) but as a pure projection, so it runs on a stream
-    * with no shuffle. */
-  private def laneMins(shSet: Column, numHashes: Int): Seq[Column] = {
-    val h31 = transform(shSet,
-      x => Hashing.hash60(x).bitwiseAND(lit(Hashing.Mask31)))
-    (0 until numHashes).map { i =>
-      array_min(transform(h31, h => Hashing.lane(h, i)))
-    }
-  }
-
-  /** (docId, bucket) rows: one per (doc, band), bucket id = hash of
-    * (band, band-lane concat) — same banding as `Dedup.lshBands` with
-    * the band index folded into the bucket key. */
+  /** (docId, bucket) rows: one per (doc, band), bucket id = the band's
+    * hash folded with the band index — the batch chain's signature and
+    * banding (`Dedup.minhashFromShingleSets` + `Dedup.lshBands`: the
+    * same [[MinHashSig]] and [[LshBandHashes]] expressions) as one pure
+    * projection, so it runs on a stream with no shuffle. A NULL set
+    * gets no rows; an empty set gets the all-NULL-lane band hashes. */
   def bucketRows(docs: DataFrame, idCol: String, shCol: String,
       numHashes: Int = 64, rowsPerBand: Int = 4): Dataset[BucketRow] = {
     import docs.sparkSession.implicits._
-    val numBands = numHashes / rowsPerBand
-    val lanes = laneMins(col(shCol), numHashes)
-    val bandStructs = (0 until numBands).map { b =>
-      val parts = (0 until rowsPerBand)
-        .map(j => lanes(b * rowsPerBand + j).cast("string"))
-      struct(lit(b).as("band"),
-        Hashing.hash60(concat_ws(",", parts: _*)).as("band_hash"))
-    }
+    val bands = ColumnBridge.column(LshBandHashes(
+      MinHashSig(ColumnBridge.expression(col(shCol)), numHashes),
+      rowsPerBand))
     docs.select(col(idCol).cast("long").as("docId"),
-        explode(array(bandStructs: _*)).as("bb"))
+        posexplode(bands).as(Seq("band", "band_hash")))
       // fold the band index into the state key: 16 disjoint key
       // spaces. Bitwise (shift+or), not arithmetic: the hash is
       // 60-bit, so a multiplicative fold overflows int64 under ANSI;
       // (hash << 4) | band is injective and wraps harmlessly
-      .select(shiftleft(col("bb.band_hash"), 4)
-        .bitwiseOR(col("bb.band")).as("bucket"), col("docId"))
+      .select(shiftleft(col("band_hash"), 4)
+        .bitwiseOR(col("band")).as("bucket"), col("docId"))
       .as[BucketRow]
   }
 

@@ -39,19 +39,4 @@ class Hash60Spec extends SparkSpec {
       assert(bad.count() === 0)
     }
   }
-
-  private def withNoCodegen(f: => Unit): Unit = {
-    val k = "spark.sql.codegen.wholeStage"
-    val k2 = "spark.sql.codegen.factoryMode"
-    val saved = (spark.conf.get(k), spark.conf.getOption(k2))
-    spark.conf.set(k, "false")
-    spark.conf.set(k2, "NO_CODEGEN")
-    try f finally {
-      spark.conf.set(k, saved._1)
-      saved._2 match {
-        case Some(v) => spark.conf.set(k2, v)
-        case None => spark.conf.unset(k2)
-      }
-    }
-  }
 }
